@@ -1,7 +1,9 @@
 #!/usr/bin/env python3
 """Local mirror of the driver's correctness gate: compare Verify output
 parquet against DuckDB oracle results (column-name-sorted, row-sorted,
-value-normalized). Usage: check.py <verify_out_dir> <sf_dir>"""
+value-normalized). Trailing query names restrict the check to those
+queries (after a `graft.Verify <sf> <out> <name>...` subset run).
+Usage: check.py <verify_out_dir> <sf_dir> [query ...]"""
 import sys, os, json, glob
 import duckdb
 import pyarrow.parquet as pq
@@ -9,6 +11,7 @@ import pandas as pd
 
 out = sys.argv[1] if len(sys.argv) > 1 else '/tmp/verify_out'
 sf = sys.argv[2] if len(sys.argv) > 2 else '/root/testdata/sf0.01'
+only = set(sys.argv[3:])
 
 con = duckdb.connect()
 for t in ['region','nation','customer','supplier','part','orders','lineitem',
@@ -16,6 +19,7 @@ for t in ['region','nation','customer','supplier','part','orders','lineitem',
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
 
 oracle = json.load(open(f'{out}/oracle_sql.json'))
+oracle = {k: v for k, v in oracle.items() if not only or k in only}
 
 def norm(df):
     df = df.reindex(sorted(df.columns), axis=1)
@@ -59,7 +63,7 @@ for name in sorted(oracle):
 # rows-only checks
 for d in sorted(glob.glob(f'{out}/q*')):
     name = os.path.basename(d)
-    if name not in oracle:
+    if name not in oracle and (not only or name in only):
         files = glob.glob(f'{d}/*.parquet')
         n = sum(pq.ParquetFile(f).metadata.num_rows for f in files) if files else -1
         print(f'ROWS {name}: {n}')

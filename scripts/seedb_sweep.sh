@@ -32,8 +32,7 @@ for t in ['region', 'nation', 'customer', 'supplier', 'part', 'orders',
 EOF
 
 echo "[seedb] 3/4 Verify $FLAT -> $OUT"
-SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-8}" \
-  sbt -batch "runMain graft.Verify $FLAT $OUT" > "$WORK.verify.log" 2>&1 \
+sbt -batch "runMain graft.Verify $FLAT $OUT" > "$WORK.verify.log" 2>&1 \
   || { tail -20 "$WORK.verify.log"; exit 1; }
 grep '\[verify\]' "$WORK.verify.log" || true
 

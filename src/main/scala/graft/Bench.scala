@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every declared query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line with per-query wall times.
   *
@@ -16,7 +14,7 @@ import org.apache.spark.sql.SparkSession
   * not billed to the first query.
   *
   * Kill tolerance (round-5 lesson — a contended 1-hour window produced
-  * an EMPTY bench artifact): every completed wall is streamed to stderr
+  * an EMPTY bench artifact): every completed wall is streamed to stdout
   * as a `[bench-wall] {...}` line THE MOMENT it completes, so a killed
   * run still leaves the full per-query record in the log tail; and each
   * query run is capped at SPARK_GRAFT_BENCH_CAP seconds (default 120) —
@@ -25,49 +23,15 @@ import org.apache.spark.sql.SparkSession
   * pathological query can never eat the whole bench window.
   */
 object Bench {
+  /** The session for input `sfDir`, shared with [[Verify.settings]]. */
+  def settings(sfDir: String, cpus: Int = GraftSession.defaultCpus): Map[String, String] =
+    GraftSession.settings(cpus, Some(sfDir))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt.max(1)
     val capSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_CAP", "120").toInt
-    // Scale-adaptive shuffle partitions (round-17, VERDICT r16 #6; guide
-    // §2: derive partitioning from input size, don't hard-code either
-    // end). The old cpus-keyed setting billed every reduce stage 32
-    // near-empty tasks at sf0.1 — the driver measured the whole suite
-    // FASTER at 8 cpus than at 32 (624 vs 832 s), a pure fixed-overhead
-    // inversion. partitions = clamp(ceil(datasetBytes / 2 MiB), 1,
-    // cpus): the 2 MiB constant shapes only the small-input end (any
-    // dataset ≥ 2 MiB × parallelism reaches the clamp, so a cluster
-    // keeps its configured parallelism — the same derivation shape as
-    // the r16 streaming state-partition rule). AQE's parallelismFirst
-    // coalescing was A/B'd as the alternative and measured WORSE at
-    // sf0.1 (it collapses real compute to 1 partition: q271 7.4 →
-    // 12.9 s); this derivation at 8 partitions measured better on every
-    // probed query class (ETL q109 14.2 → 10.4, graph q172 13.1 → 9.7,
-    // shingle q156 3.5 → 2.2, relational/streaming neutral-to-better).
-    def dirBytes(p: String): Long = {
-      val d = new java.io.File(p)
-      if (!d.isDirectory) 0L
-      else d.listFiles().map(f =>
-        if (f.isDirectory) dirBytes(f.getPath) else f.length()).sum
-    }
-    val bytesPerPart = sys.env
-      .getOrElse("SPARK_GRAFT_SHUFFLE_BYTES_PER_PARTITION", (2L << 20).toString)
-      .toLong
-    val shuffleParts = sys.env.get("SPARK_GRAFT_SHUFFLE").map(_.toInt).getOrElse(
-      math.max(1L, math.min(
-        (dirBytes(sfDir) + bytesPerPart - 1) / bytesPerPart, cpus.toLong)).toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // events.parquet carries ns timestamps; read as long, convert in Q.events
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .config("spark.driver.maxResultSize", "2g")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(settings(sfDir)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // warm up: JVM + parquet footer reads
@@ -266,7 +230,7 @@ object Bench {
     val dataRatio = sys.env.getOrElse("SPARK_GRAFT_SCALING_RATIO", "10").toDouble
     val flaggedNames = scala.collection.mutable.ListBuffer[String]()
     val scalingJson =
-      if (!new java.io.File(scalingDir).isDirectory) "null"
+      if (only.nonEmpty || !new java.io.File(scalingDir).isDirectory) "null"
       else {
         // drop suite state: persisted frames (ours and Spark's cache
         // registry) and a forced GC so the re-times start from a clean
@@ -322,12 +286,13 @@ object Bench {
     // re-measurement — BENCH_r13's q200 capped both driver runs at
     // 120 s while measuring 5.4 s healthy, and nothing in the artifact
     // could say which number was real. So every capped query re-runs
-    // in a FRESH JVM (same flags + classpath, graft.BenchOne, a
-    // warm-up pass then a steady-state pass) and the artifact records
-    // both walls: a fresh-JVM wall near the cap means the plan itself
-    // is slow; a fast fresh-JVM wall means suite/box contention.
+    // in a FRESH JVM (same flags + classpath, `graft.Bench <name>` with
+    // two runs) and the artifact records its first and best walls: a
+    // fresh-JVM wall near the cap means the plan itself is slow; a fast
+    // fresh-JVM wall means suite/box contention. Full suite only, so the
+    // child (which names its query) never spawns a repro of its own.
     val reproJson =
-      if (capped.isEmpty) "null"
+      if (only.nonEmpty || capped.isEmpty) "null"
       else {
         val javaBin = new java.io.File(new java.io.File(
           System.getProperty("java.home"), "bin"), "java").getPath
@@ -338,25 +303,30 @@ object Bench {
         val cp = System.getProperty("java.class.path")
         val entries = capped.toSeq.sorted.map { name =>
           System.err.println(s"[bench] capped-query repro: $name in a fresh JVM")
-          val cmd = Seq(javaBin) ++ jvmArgs ++
-            Seq("-cp", cp, "graft.BenchOne", name, name)
+          val cmd = Seq(javaBin) ++ jvmArgs ++ Seq("-cp", cp, "graft.Bench", name)
           val pb = new ProcessBuilder(cmd: _*)
+          val childOut = java.io.File.createTempFile(s"bench-repro-$name-", ".json")
           pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
+          pb.environment().put("SPARK_GRAFT_BENCH_RUNS", "2")
+          pb.environment().put("SPARK_GRAFT_BENCH_OUT", childOut.getPath)
           pb.redirectErrorStream(true)
-          val walls = scala.collection.mutable.ListBuffer[Double]()
+          @volatile var wall: Option[(String, String)] = None
           var rc = -1
           var timedOut = false
           try {
             val proc = pb.start()
             val reader = new java.io.BufferedReader(
               new java.io.InputStreamReader(proc.getInputStream))
-            val wallRe = """\[benchone\] \S+ ([0-9.]+) s""".r
+            val wallRe =
+              """\[bench-wall\] \{.*"sec":([0-9.]+),"first_sec":([0-9.]+)""".r.unanchored
             // drain continuously so the child never blocks on a full pipe
             val drainer = new Thread(() => {
               var line = reader.readLine()
               while (line != null) {
-                wallRe.findFirstMatchIn(line)
-                  .foreach(m => walls.synchronized { walls += m.group(1).toDouble })
+                line match {
+                  case wallRe(sec, first) => wall = Some((first, sec))
+                  case _ => ()
+                }
                 line = reader.readLine()
               }
             }, s"repro-drain-$name")
@@ -369,10 +339,8 @@ object Bench {
           } catch {
             case scala.util.control.NonFatal(e) =>
               System.err.println(s"[bench] repro $name failed to launch: ${e.getMessage}")
-          }
-          val ws = walls.synchronized(walls.toList)
-          val warm = ws.headOption.map(w => f"$w%.3f").getOrElse("null")
-          val steady = if (ws.length >= 2) f"${ws(1)}%.3f" else "null"
+          } finally childOut.delete()
+          val (warm, steady) = wall.getOrElse(("null", "null"))
           System.err.println(
             s"""[bench-repro] {"query":"$name","fresh_jvm_warm_sec":$warm,"fresh_jvm_sec":$steady,"rc":$rc,"timed_out":$timedOut}""")
           "\"" + name + "\":" +

@@ -9,8 +9,11 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * expressions as SQL functions so `spark.sql("... graft_luhn(x) ...")`
   * and `expr("graft_mod97(x)")` work in any session configured with
   * `spark.sql.extensions=graft.GraftExtensions` (or
-  * `builder.withExtensions(new GraftExtensions)`). The Scala column API
-  * in [[graft.functions.Identifiers]] does not require registration.
+  * `builder.withExtensions(new GraftExtensions)`, as [[GraftSession]]
+  * does). The Scala column API in [[graft.functions.Identifiers]] does
+  * not require registration. The TopKPerGroup planner strategy is not
+  * injected here: `TopK.topKPerGroup` installs it lazily, which also
+  * covers sessions built without these extensions.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -24,10 +27,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[LuhnValid].getName, "graft_luhn"),
       (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
         LuhnValid(children.head)))
-    // whole-operator extension: plans graft.plans.TopKPerGroup as
-    // partial-heap -> exchange -> final-heap (TopK.topKPerGroup also
-    // self-installs via spark.experimental.extraStrategies for
-    // sessions built without extensions)
-    ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
   }
 }

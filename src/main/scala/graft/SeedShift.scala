@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Second-seed dataset generator: a deterministic, schema-preserving
@@ -39,13 +39,7 @@ object SeedShift {
   def main(args: Array[String]): Unit = {
     val src = args.lift(0).getOrElse("/root/testdata/sf0.01")
     val dst = args.lift(1).getOrElse("target/seedB")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.settings(inputDir = Some(src))).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def read(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")

@@ -31,7 +31,7 @@ object SparkEntry {
     * frames, shared graph-fixture edge frames) and cut iteration
     * lineage with `localCheckpoint`. Those blocks are released at QUERY
     * BOUNDARIES, not by the operators themselves — after consuming a
-    * query's result, call [[sweepQueryState]] (as Bench/Verify/BenchOne
+    * query's result, call [[sweepQueryState]] (as Bench and Verify
     * do) or the block manager accumulates one corpus-sized frame per
     * query for the life of the session. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =

@@ -1,9 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** The session Bench times for the same input (see [[Bench.settings]]),
+    * so the oracle gates the benchmarked plans. */
+  def settings(sfDir: String, cpus: Int = GraftSession.defaultCpus): Map[String, String] =
+    GraftSession.settings(cpus, Some(sfDir))
+
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val outDir = args(1)
     // optional trailing names: dump only those queries (local iteration);
@@ -11,15 +15,7 @@ object Verify {
     val only = args.drop(2).toSet
     only.diff(SparkEntry.queries.keySet).foreach(n =>
       System.err.println(s"[verify] WARNING: no query named '$n' — skipped"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries ns timestamps; read as long, convert in Q.events
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(settings(sfDir)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // no coalesce(1): a single-task write serializes at larger sf; the

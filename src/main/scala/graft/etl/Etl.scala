@@ -529,10 +529,7 @@ object Etl {
         // sink concurrent) = 20.4s — the cap does not serialize the ten
         // product sinks; each exporter is itself a parallel Spark
         // action, so extra submitter threads only contend for cores.
-        // SPARK_GRAFT_EXPORT_POOL overrides for cluster-side tuning.
-        val poolThreads = math.max(1, sys.env.get("SPARK_GRAFT_EXPORT_POOL")
-          .flatMap(_.toIntOption)
-          .getOrElse(math.min(cfg.exporters.size, 8)))
+        val poolThreads = math.max(1, math.min(cfg.exporters.size, 8))
         val pool = java.util.concurrent.Executors.newFixedThreadPool(
           poolThreads,
           new java.util.concurrent.ThreadFactory {
@@ -583,7 +580,9 @@ object Etl {
           s"${cfg.outRoot}/datasets/latest/${cfg.datasetName}")
         val fs = src.getFileSystem(conf)
         if (fs.exists(dst)) fs.delete(dst, true)
-        org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, dst, false, conf)
+        // no exporters → no product dir: latest still records the version
+        if (fs.exists(src)) org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, dst, false, conf)
+        else fs.mkdirs(dst)
         val marker = fs.create(
           new org.apache.hadoop.fs.Path(dst, "_VERSION"), true)
         marker.write(cfg.version.getBytes("UTF-8"))

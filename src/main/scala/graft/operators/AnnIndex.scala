@@ -337,7 +337,7 @@ object AnnIndex {
   // FAISS residual refinement): raw-vector ADC keeps the arithmetic
   // identical to the oracle-gated ProductQuantizer form, and the recall
   // the composition buys comes from cell scoping, which the decade
-  // probe measures directly (ProbeAnnRecall ivfpq mode). ———
+  // probe measured directly (STRESS.md, ProbeAnnRecall ivfpq mode). ———
 
   /** One versioned IVFPQ index frame: 'c' rows are coarse centroids,
     * 'b' rows the PQ codebooks (centroid_id = subspace, id = code,

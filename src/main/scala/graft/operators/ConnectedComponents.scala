@@ -89,12 +89,20 @@ object ConnectedComponents {
       case _ => false
     }
 
+  /** Signature of a pointer set: its rows, the sum of its edge hashes
+    * (the convergence check) and the octets of its src and dst keys. */
+  private final case class Sig(rows: Long, hash: java.math.BigDecimal,
+      srcBytes: Long, dstBytes: Long) {
+    def keyBytes: Long = srcBytes + dstBytes
+  }
+
   /** Driver union-find over a gate-small pointer set. Input `e` is the
     * current canonical (src > dst) edge frame; output is the FIXPOINT
     * pointer set — one (member, min-label) row per non-root member —
     * i.e. exactly the frame the distributed rounds converge to, so the
-    * downstream component derivation is unchanged. */
-  private def localSolve(e: DataFrame): DataFrame = {
+    * downstream component derivation is unchanged — with its signature
+    * (hash unset: nothing checks convergence after a local finish). */
+  private def localSolve(e: DataFrame, fixedKeyWidth: Long): (DataFrame, Sig) = {
     import org.apache.spark.sql.types._
     val spark = e.sparkSession
     val dt = e.schema("src").dataType
@@ -147,11 +155,19 @@ object ConnectedComponents {
       i += 1
     }
     val out = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row]()
+    def octets(k: Any): Long = k match {
+      case s: String => s.getBytes("UTF-8").length.toLong
+      case _ => fixedKeyWidth
+    }
+    var srcBytes = 0L
+    var dstBytes = 0L
     i = 0
     while (i < keys.length) {
       val m = minOf.get(find(i))
-      if (keys(i) != m)
+      if (keys(i) != m) {
         out += org.apache.spark.sql.Row(keys(i), m)
+        srcBytes += octets(keys(i)); dstBytes += octets(m)
+      }
       i += 1
     }
     // RDD-backed, not LocalRelation: a gate-sized (≤ millions of rows)
@@ -159,9 +175,10 @@ object ConnectedComponents {
     // as an RDD leaf it is just a reference (the final attach broadcast-
     // gates it by the known bound, so the missing stats cost nothing).
     val slices = math.max(1, out.length / 500000)
-    spark.createDataFrame(
+    (spark.createDataFrame(
       spark.sparkContext.parallelize(out.toSeq, slices),
-      StructType(Seq(StructField("src", dt), StructField("dst", dt))))
+      StructType(Seq(StructField("src", dt), StructField("dst", dt)))),
+      Sig(out.length.toLong, java.math.BigDecimal.ZERO, srcBytes, dstBytes))
   }
 
   /** edges: two long columns (src, dst). Returns (id, component) where
@@ -200,7 +217,7 @@ object ConnectedComponents {
 
     // Order-independent set signature: (cardinality, sum of 64-bit edge
     // hashes as decimal — decimal so ANSI mode can't overflow-throw,
-    // plus the summed key octets that price the local-finish byte gate
+    // plus the summed src and dst key octets that price the byte gates
     // — measured for string keys, exact rows × width for fixed-width
     // ones; all in the SAME single scan).
     // Over distinct pointer sets, two different sets collide with
@@ -209,20 +226,18 @@ object ConnectedComponents {
     val keyIsString =
       e.schema("src").dataType == org.apache.spark.sql.types.StringType
     val fixedKeyWidth = e.schema("src").dataType.defaultSize.toLong
-    def sig(df: DataFrame): (Long, java.math.BigDecimal, Long) = {
-      val keyBytesExpr =
-        if (keyIsString)
-          sum((octet_length(col("src")) + octet_length(col("dst"))).cast("long"))
-        else sum(lit(0L))
+    def sig(df: DataFrame): Sig = {
+      def octets(c: String) =
+        if (keyIsString) sum(octet_length(col(c)).cast("long")) else sum(lit(0L))
       val r = df.agg(
         count(lit(1)),
         sum(xxhash64(col("src"), col("dst")).cast("decimal(38,0)")),
-        keyBytesExpr).head()
+        octets("src"), octets("dst")).head()
       val s = if (r.isNullAt(1)) java.math.BigDecimal.ZERO else r.getDecimal(1)
-      val kb =
-        if (keyIsString) { if (r.isNullAt(2)) 0L else r.getLong(2) }
-        else r.getLong(0) * 2L * fixedKeyWidth
-      (r.getLong(0), s, kb)
+      def kb(i: Int) =
+        if (!keyIsString) r.getLong(0) * fixedKeyWidth
+        else if (r.isNullAt(i)) 0L else r.getLong(i)
+      Sig(r.getLong(0), s, kb(2), kb(3))
     }
     var prevSig = sig(e) // materialize once so each round starts cached
 
@@ -259,11 +274,12 @@ object ConnectedComponents {
       // below is unchanged. Both gates must pass: rows (union-find
       // array sizing) and key bytes (collect()/driver-heap sizing —
       // see LocalSolveBytesConfKey).
-      if (canLocal && prevSig._1 <= localCap &&
-          (localBytesCap <= 0 || prevSig._3 <= localBytesCap)) {
-        val solved = localSolve(e)
+      if (canLocal && prevSig.rows <= localCap &&
+          (localBytesCap <= 0 || prevSig.keyBytes <= localBytesCap)) {
+        val (solved, solvedSig) = localSolve(e, fixedKeyWidth)
         e.unpersist(blocking = false)
         e = solved
+        prevSig = solvedSig
         converged = true
       } else {
       // Large-star: for each node u, connect every strictly-larger
@@ -316,7 +332,7 @@ object ConnectedComponents {
         // Cheap per-round barrier: one aggregate scan materializes the
         // (possibly chained) checkpoints and yields the set signature.
         val newSig = sig(small)
-        if (newSig._1 == prevSig._1 && newSig._2.compareTo(prevSig._2) == 0) {
+        if (newSig.rows == prevSig.rows && newSig.hash.compareTo(prevSig.hash) == 0) {
           // Signature says fixpoint — confirm with the exact set-equality
           // join. Runs once at convergence (plus ~never on collisions),
           // not once per round.
@@ -336,10 +352,15 @@ object ConnectedComponents {
     }
 
     // At fixpoint every edge is (node -> component root). Attach isolated nodes.
+    // Each `comp` row is one row of the union below, so its size is
+    // bounded by the union's: 2 rows per pointer and Σ|src| + 3·Σ|dst|
+    // bytes over the pointer set that prevSig describes.
     val comp = e.select(col("src").as("id"), col("dst").as("component"))
       .union(e.select(col("dst").as("id"), col("dst").as("component")))
       .groupBy(col("id")).agg(min(col("component")).as("component"))
-    val out = n.join(gated(comp, 2 * prevSig._1, 2 * prevSig._3), Seq("id"), "left")
+    val out = n.join(
+      gated(comp, 2 * prevSig.rows, prevSig.srcBytes + 3 * prevSig.dstBytes),
+      Seq("id"), "left")
       .select(col("id"), coalesce(col("component"), col("id")).as("component"))
     out
   }

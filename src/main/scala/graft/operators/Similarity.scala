@@ -479,8 +479,7 @@ object Similarity {
     * the production rule is k ≈ √n (cell size √n, probe cost
     * nprobe·√n). Measured at n=10k: a k∝n seed (the q93 fixture's
     * vec_id%50, pinned for oracle stability) runs the IVF pipeline in
-    * 9.6 s where k=√n runs it in 4.0 s; graft.StressCheck re-derives
-    * the A/B on any stress directory.
+    * 9.6 s where k=√n runs it in 4.0 s (STRESS.md records the A/B).
     *
     * Returns (centroid_id, cvec array<double>). Deterministic for a
     * fixed iteration count with `earlyStop = false` — what the oracle

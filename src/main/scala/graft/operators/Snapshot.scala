@@ -477,8 +477,8 @@ object Snapshot {
     * write mass (scattered point updates touching many files: COW
     * rewrites whole files to change single rows); otherwise COW (a
     * batch DENSE in its touched files pays little extra to materialize
-    * now and keeps every later read clean — the ProbeMorDv sweep
-    * measures exactly that read-side rent). `cowFactor` is the
+    * now and keeps every later read clean — STRESS.md's ProbeMorDv
+    * sweep measured exactly that read-side rent). `cowFactor` is the
     * deployment's read/write exchange rate; 4 is a batch-analytics
     * default (reads dominate), streaming-upsert deployments set it
     * higher.

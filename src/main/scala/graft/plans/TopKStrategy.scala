@@ -7,10 +7,10 @@ import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.graftbridge.DatasetBridge
 
 /** Plans [[TopKPerGroup]] as partial-heap → (EnsureRequirements-
-  * inserted hash exchange) → final-heap. Registered either via
-  * GraftExtensions (`spark.sql.extensions`) or lazily by
+  * inserted hash exchange) → final-heap. Registered lazily by
   * [[TopK.topKPerGroup]] through `spark.experimental.extraStrategies`
-  * — the public extension hook, so callers need no session config. */
+  * — the public extension hook, so callers need no session config and
+  * sessions built anywhere (an embedder's, a harness's) plan it. */
 object TopKStrategy extends org.apache.spark.sql.execution.SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case TopKPerGroup(g, o, k, child) =>

@@ -33,7 +33,7 @@ object GraphSketchQueries {
     * query; RELEASE CONTRACT (round-16 ADVICE): consumers of these
     * decls must call SparkEntry.sweepQueryState (or
     * QueryScoped.releaseAll) at each query boundary, as
-    * Bench/Verify/BenchOne do — an embedder that skips the sweep leaks
+    * Bench and Verify do — an embedder that skips the sweep leaks
     * one corpus-sized cached edge frame per query invocation. */
   private def coPurchaseEdges(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {

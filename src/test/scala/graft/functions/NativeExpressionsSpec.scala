@@ -2,7 +2,6 @@ package graft.functions
 
 import graft.SparkSpec
 import graft.operators.Skew
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 class NativeExpressionsSpec extends SparkSpec {
@@ -33,29 +32,11 @@ class NativeExpressionsSpec extends SparkSpec {
   }
 
   test("expressions register as SQL functions via SparkSessionExtensions") {
-    // getOrCreate() would return the shared test session (extensions are
-    // applied at session construction); detach it first so a fresh
-    // session with the extension builds over the same SparkContext.
-    val prior = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val extended = SparkSession.builder()
-        .master("local[2]")
-        .config("spark.sql.shuffle.partitions", 2)
-        .config("spark.ui.enabled", "false")
-        .withExtensions(new graft.GraftExtensions)
-        .getOrCreate()
-      val row = extended.sql(
-        "SELECT graft_mod97('98') AS m, graft_luhn('79927398713') AS l").collect()(0)
-      assert(row.getInt(0) == 98 % 97)
-      assert(row.getBoolean(1)) // canonical Luhn test number
-    } finally {
-      prior.foreach { s =>
-        SparkSession.setDefaultSession(s)
-        SparkSession.setActiveSession(s)
-      }
-    }
+    // the shared session is built by GraftSession, which installs them
+    val row = spark.sql(
+      "SELECT graft_mod97('98') AS m, graft_luhn('79927398713') AS l").collect()(0)
+    assert(row.getInt(0) == 98 % 97)
+    assert(row.getBoolean(1)) // canonical Luhn test number
   }
 
   test("salted aggregations match their direct forms") {

@@ -221,4 +221,33 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(out(1L)._2 && out(2L)._2)      // 1-2 merged but vetoed
     assert(!out(3L)._2 && !out(4L)._2)    // 3-4 clean
   }
+
+  test("final attach bounds comp's bytes soundly when dst keys are long") {
+    // 100 pairs (bNN -> a 201-byte root): comp holds Σ|src| + 3·Σ|dst| =
+    // 300 + 3·20,100 = 60,600 bytes; 2·(Σ|src| + Σ|dst|) = 40,800 would
+    // undercount it, so a 50,000-byte cap must keep comp unbroadcast.
+    val pairs = (0 until 100).map(i => (f"b$i%02d", "a" + "x" * 197 + f"$i%03d"))
+    val nodes = pairs.flatMap { case (b, r) => Seq(b, r) }.toDF("id")
+    val expected = pairs.flatMap { case (b, r) => Seq(b -> r, r -> r) }.toMap
+    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled")
+    val thresholdWas = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    // only the operator's hint may broadcast (a persisted round frame
+    // carries real stats the planner would act on by itself)
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set(IterState.BytesConfKey, "50000")
+    try {
+      for (local <- Seq(true, false)) {
+        def run() = ConnectedComponents.run(nodes, pairs.toDF("src", "dst"))
+        val out = if (local) run() else distributedOnly(run())
+        val plan = out.queryExecution.executedPlan.toString
+        assert(!plan.contains("BroadcastExchange"), s"local=$local\n$plan")
+        assert(out.as[(String, String)].collect().toMap == expected, s"local=$local")
+      }
+    } finally {
+      spark.conf.unset(IterState.BytesConfKey)
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresholdWas)
+      spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
+    }
+  }
 }

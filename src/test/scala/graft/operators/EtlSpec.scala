@@ -68,6 +68,17 @@ class EtlSpec extends SparkSpec {
       .subsetOf(persistedBefore))
   }
 
+  test("a run with no exporters still promotes latest/_VERSION") {
+    val root = tmpRoot("noexporters")
+    val res = Etl.run(spark, stmts(baseRows, "2025-01-01 00:00:00"), noDecisions,
+      Etl.Config("t", "v1", root, "2025-01-01 00:00:00", exporters = Seq.empty))
+    assert(res.entityCount === 3 && res.products.isEmpty)
+    def read(p: String) = new String(
+      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)), "UTF-8")
+    assert(read(s"$root/datasets/latest/t/_VERSION") === "v1")
+    assert(read(s"$root/state/t/last_successful_version") === "v1")
+  }
+
   test("fatal GTE assertion aborts before any product is written") {
     val root = tmpRoot("abort")
     val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
