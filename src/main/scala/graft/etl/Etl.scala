@@ -114,12 +114,20 @@ object Etl {
       extends RuntimeException(
         s"product export exceeded $timeout; unfinished: ${stuck.mkString(", ")}")
 
+  /** `stageSeconds` is the wall of each pipeline stage in run order:
+    * canonicalize, enrich, store, assemble, validate, products,
+    * publish. */
   final case class Result(
       version: String,
       productDir: String,
       products: Map[String, String],
       entityCount: Long,
-      danglingRefCount: Long)
+      danglingRefCount: Long,
+      stageSeconds: scala.collection.immutable.ListMap[String, Double])
+
+  /** Lines per line-oriented product file (~ a few hundred MB of FtM
+    * JSON); the file count derives from the entity count. */
+  private val ProductRowsPerFile = 500000L
 
   private def statementsRoot(cfg: Config) = s"${cfg.outRoot}/statements"
 
@@ -170,13 +178,12 @@ object Etl {
       crawlIssues: Option[DataFrame] = None): Result = {
     import spark.implicits._
     val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
-    // opt-in stage timing (GRAFT_ETL_TIMING=1): wall per pipeline stage
-    // to stderr — a profiling probe, not a product
-    val timed = sys.env.get("GRAFT_ETL_TIMING").contains("1")
+    // wall per pipeline stage, returned in Result.stageSeconds
+    var stageSeconds = scala.collection.immutable.ListMap.empty[String, Double]
     var lastTick = System.nanoTime()
-    def tick(stage: String): Unit = if (timed) {
+    def tick(stage: String): Unit = {
       val now = System.nanoTime()
-      System.err.println(f"[etl-timing] $stage: ${(now - lastTick) / 1e9}%.2f s")
+      stageSeconds += stage -> (now - lastTick) / 1e9
       lastTick = now
     }
 
@@ -194,14 +201,11 @@ object Etl {
         // waste; this is the reference's linker scope (judgement pairs)
         val decisionIds = decisions.select(col("a").as("id"))
           .unionByName(decisions.select(col("b").as("id"))).distinct()
-        val mapping = Resolver.canonicalize(decisionIds, decisions)
-        // the remap is decision-scoped (tiny) but its lineage is the
-        // whole CC run — checkpoint it, or every downstream plan that
-        // broadcasts it re-walks (and re-plans) the resolver DAG once
-        // per reference; measured 10-40× on the enrichment flow
-        Some(mapping.filter(col("canonical") =!= col("id"))
-          .select(col("id").as("entityId"), col("canonical"))
-          .localCheckpoint())
+        // canonicalize's output is already a checkpointed leaf, so
+        // every plan that broadcasts the remap stays a scan of it
+        Some(Resolver.canonicalize(decisionIds, decisions)
+          .filter(col("canonical") =!= col("id"))
+          .select(col("id").as("entityId"), col("canonical")))
       }
     def canonicalizeFrame(df: DataFrame): DataFrame = remapOpt match {
       case None => df.withColumn("canonicalId", col("entityId"))
@@ -226,7 +230,7 @@ object Etl {
           .drop("__refv", "__refc")
     }
     val crawled = canonicalizeFrame(statements)
-    tick("canonicalize-plan")
+    tick("canonicalize")
 
     // ---- 1b. enrich (optional): the q110 xref flow composed INTO the
     // run — blocked candidates against the external target store,
@@ -358,11 +362,11 @@ object Etl {
     }
     val ordered = withSeen.select(
       Statement.sparkSchema.map(f => col(f.name).cast(f.dataType)): _*)
-    tick("enrich-plan")
+    tick("enrich")
     StatementIO.write(ordered.as[Statement], statementsRoot(cfg), cfg.version)
-    tick("store-write")
+    tick("store")
     // the write is a materialization barrier: everything the resolver
-    // stage cached (id-hash map, CC round checkpoints) is consumed now —
+    // stage cached (CC round checkpoints, the mapping) is consumed now —
     // release it so a long-lived session does not accumulate storage
     spark.sparkContext.getPersistentRDDs
       .filterNot { case (id, _) => persistedBefore.contains(id) }
@@ -392,7 +396,7 @@ object Etl {
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
       val entityCount = entities.count()
-      tick("assemble-count")
+      tick("assemble")
 
       // ---- 4. validate: assertion gate (fatal = failed GTE, aborts;
       // failed LTE assertions become warning-level issues —
@@ -435,8 +439,7 @@ object Etl {
       // one shard per shuffle partition): every line-oriented product
       // is ~entityCount lines, and entityCount is already counted, so
       // the file count derives from the data —
-      // ceil(entityCount / spark.graft.productRowsPerFile [500k lines
-      // ≈ a few hundred MB of FtM JSON]) — instead of inheriting the
+      // ceil(entityCount / ProductRowsPerFile) — instead of inheriting the
       // cpus-keyed partition count. Locally that turns 10 products ×
       // 32 near-empty shards (each a task commit, then a serial
       // publish-copy of ~330 files) into ~10 files; at 100 TB the same
@@ -444,12 +447,9 @@ object Etl {
       // repartition: no exchange, and sortWithinPartitions keeps the
       // per-file determinism contract unchanged (products are line
       // sets).
-      val productFiles: Int = {
-        val target = spark.conf.getOption("spark.graft.productRowsPerFile")
-          .map(_.toLong).getOrElse(500000L)
-        math.max(1L, (entityCount + target - 1) / target)
+      val productFiles: Int =
+        math.max(1L, (entityCount + ProductRowsPerFile - 1) / ProductRowsPerFile)
           .min(Int.MaxValue.toLong).toInt
-      }
       def sized(df: DataFrame): DataFrame = df.coalesce(productFiles)
       // the sinks are independent jobs over the ONE persisted frame —
       // submit them concurrently (the Spark scheduler interleaves their
@@ -558,7 +558,6 @@ object Etl {
             throw e
         }
       }
-      tick("products")
       // K13: a non-empty issue log publishes as issues.json
       // (runtime/issues.py; exporters write it alongside the products)
       val issuesProduct =
@@ -569,34 +568,25 @@ object Etl {
             .sortWithinPartitions("json"), s"$dir/issues.json")
           Map("issues.json" -> s"$dir/issues.json")
         } else Map.empty[String, String]
+      tick("products")
 
       // ---- 6. publish: promote to latest + record the successful
       // version (publish.py:63-94; runtime/versions.py
       // set_last_successful_version).
-      if (cfg.republishLatest) {
-        val conf = spark.sparkContext.hadoopConfiguration
-        val src = new org.apache.hadoop.fs.Path(dir)
-        val dst = new org.apache.hadoop.fs.Path(
-          s"${cfg.outRoot}/datasets/latest/${cfg.datasetName}")
-        val fs = src.getFileSystem(conf)
-        if (fs.exists(dst)) fs.delete(dst, true)
-        // no exporters → no product dir: latest still records the version
-        if (fs.exists(src)) org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, dst, false, conf)
-        else fs.mkdirs(dst)
-        val marker = fs.create(
-          new org.apache.hadoop.fs.Path(dst, "_VERSION"), true)
-        marker.write(cfg.version.getBytes("UTF-8"))
-        marker.close()
-      }
+      if (cfg.republishLatest)
+        StatementIO.publishLatest(spark, s"${cfg.outRoot}/datasets", cfg.version,
+          cfg.datasetName)
       val fs = new org.apache.hadoop.fs.Path(cfg.outRoot)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       val state = fs.create(new org.apache.hadoop.fs.Path(
         s"${cfg.outRoot}/state/${cfg.datasetName}/last_successful_version"), true)
       state.write(cfg.version.getBytes("UTF-8"))
       state.close()
+      tick("publish")
 
       issues.unpersist(blocking = false)
-      Result(cfg.version, dir, products ++ issuesProduct, entityCount, dangling)
+      Result(cfg.version, dir, products ++ issuesProduct, entityCount, dangling,
+        stageSeconds)
     } finally entities.unpersist(blocking = false)
   }
 

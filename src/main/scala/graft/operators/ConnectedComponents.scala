@@ -15,10 +15,7 @@ import org.apache.spark.storage.StorageLevel
   *
   * Scale notes:
   *  - each round is a bounded number of shuffles on the edge frame keyed
-  *    by node id; lineage is cut every round (localCheckpoint on local
-  *    mode, reliable `checkpoint` when `checkpointDir` is set — on a real
-  *    cluster a lost executor would otherwise kill a localCheckpoint'd
-  *    job mid-iteration);
+  *    by node id; lineage is cut every round by a localCheckpoint;
   *  - convergence is two-tier. Per round we compute a cheap aggregate
   *    signature over the new pointer set — (count, sum(xxhash64(src,dst))
   *    as decimal) — which is a single scan and doubles as the action
@@ -38,7 +35,7 @@ object ConnectedComponents {
     * instead of more distributed star rounds. 0 disables.
     *
     * Why this is a scale optimization and not a local-mode cheat: the
-    * bound equals [[IterState.DefaultCap]] — a frame this size is
+    * bound equals [[IterState.RowsCap]] — a frame this size is
     * already collected TO the driver (and shipped to every executor)
     * whenever the size-gated broadcast fires, so solving it there costs
     * strictly less memory than the broadcast path the operator already
@@ -51,7 +48,7 @@ object ConnectedComponents {
     * set exceeds the gate run the distributed rounds unchanged until
     * contraction brings them under it. */
   val LocalSolveConfKey = "spark.graft.ccLocalSolveEdges"
-  val LocalSolveDefault: Long = IterState.DefaultCap
+  val LocalSolveDefault: Long = IterState.RowsCap
 
   /** Byte companion to the row gate (round-17, VERDICT r16 #2): the row
     * cap alone was calibrated for long keys (~32 MB of keys at 2M rows)
@@ -181,28 +178,26 @@ object ConnectedComponents {
       Sig(out.length.toLong, java.math.BigDecimal.ZERO, srcBytes, dstBytes))
   }
 
-  /** edges: two long columns (src, dst). Returns (id, component) where
+  /** Round cap of the star iteration. */
+  private val MaxIterations = 50
+
+  /** First round that pointer-jumps (see the jump in [[run]]). */
+  private val PointerJumpAfter = 4
+
+  /** edges: two key columns (src, dst). Returns (id, component) where
     * component = min node id of the connected component. Nodes given in
-    * `nodes` (single long column `id`) are included even when isolated.
-    * Set `checkpointDir` for fault-tolerant lineage cuts on a cluster. */
-  /** @param checkEvery run the convergence check — which is also the
-    *   per-round materialization barrier — every N rounds. KEEP AT 1:
-    *   each star round references the previous edge frame twice (the
-    *   symmetrized neighbor union), so an unmaterialized round is
-    *   recomputed multiplicatively by the next one; measured, skipping
-    *   the barrier made iteration several times SLOWER, not faster. The
-    *   check itself is now a cheap hash-signature aggregate (see class
-    *   doc), so the barrier costs one scan, not a join. */
-  def run(
-      nodes: DataFrame,
-      edges: DataFrame,
-      maxIterations: Int = 50,
-      checkpointDir: Option[String] = None,
-      checkEvery: Int = 1,
-      pointerJump: Boolean = false,
-      pointerJumpAfter: Int = 4): DataFrame = {
+    * `nodes` (single key column `id`, same type as the edge keys) are
+    * included even when isolated.
+    *
+    * Every round ends in the convergence check, which is also its
+    * materialization barrier: each star round references the previous
+    * edge frame twice (the symmetrized neighbor union), so an
+    * unmaterialized round would be recomputed multiplicatively by the
+    * next one — measured several times SLOWER when the barrier was
+    * skipped. The check is a cheap hash-signature aggregate (see class
+    * doc), so the barrier costs one scan, not a join. */
+  def run(nodes: DataFrame, edges: DataFrame): DataFrame = {
     val spark = nodes.sparkSession
-    checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
 
     val n = nodes.toDF("id")
     // Symmetrize, strip self-loops; pointer form (src > dst) — edges are
@@ -241,28 +236,12 @@ object ConnectedComponents {
     }
     var prevSig = sig(e) // materialize once so each round starts cached
 
-    // Size-gated broadcast (IterState doc) is used ONLY for the final
-    // isolated-node attach below. Gating the per-round star joins was
-    // tried and measured NEUTRAL to slightly WORSE (min-of-3 A/B at
-    // sf0.1: q19 19.4 s off vs 19.7 s on; q280 19.3 s off vs 26.2 s on):
-    // ReuseExchange already dedupes the nbrs shuffle between the min
-    // aggregate and the star join, so a broadcast saves one sort but
-    // forces the BHJ stream side to recompute the whole star subtree a
-    // second time per round — a wash at the small sizes where the gate
-    // can fire at all, and the gate never fires on big graphs.
-    def gated(df: DataFrame, bound: Long, bytesBound: Long): DataFrame =
-      if (checkEvery == 1) IterState.bcastIf(df, bound, bytesBound) else df
-
     var converged = false
     var iter = 0
-    // checkEvery > 1 lets the signature (and so the gate's cardinality
-    // proxy) go stale between checks — restrict the gate to the default
-    // every-round discipline where prevSig is exact.
     val localCap = localSolveCap(spark)
     val localBytesCap = localSolveBytesCap(spark)
-    val canLocal = localCap > 0 && checkEvery == 1 &&
-      localSolvable(e.schema("src").dataType)
-    while (!converged && iter < maxIterations) {
+    val canLocal = localCap > 0 && localSolvable(e.schema("src").dataType)
+    while (!converged && iter < MaxIterations) {
       // Local finish (see LocalSolveConfKey doc): the signature scan
       // that ends every round already carries the pointer-set
       // cardinality AND its key bytes, so the gate decision is free.
@@ -310,13 +289,12 @@ object ConnectedComponents {
       // self-join per round that shortcuts long parent chains. Adaptive:
       // on short-diameter graphs (cliques, short paths) the star rounds
       // alone converge within a few iterations and the extra shuffle
-      // would be pure cost, so the first `pointerJumpAfter` rounds never
+      // would be pure cost, so the first `PointerJumpAfter` rounds never
       // jump; a loop still going after that is evidence of a
       // diameter-heavy graph (long chains), where each jump round
       // contracts depth ~3× instead of ~2× and pays for itself.
-      // `pointerJump = true` forces it from round 0.
       val small1 =
-        if (!pointerJump && iter < pointerJumpAfter) small0
+        if (iter < PointerJumpAfter) small0
         else {
           val parents = small0.select(col("src").as("_p"), col("dst").as("_gp"))
           small0.join(parents, col("dst") === col("_p"), "left")
@@ -324,26 +302,23 @@ object ConnectedComponents {
             .filter(col("src") =!= col("dst"))
             .distinct()
         }
-      val small = (if (checkpointDir.isDefined) small1.checkpoint(eager = false)
-                   else small1.localCheckpoint(eager = false))
+      val small = small1.localCheckpoint(eager = false)
         .persist(StorageLevel.MEMORY_AND_DISK)
 
-      if (iter % checkEvery == checkEvery - 1 || iter == maxIterations - 1) {
-        // Cheap per-round barrier: one aggregate scan materializes the
-        // (possibly chained) checkpoints and yields the set signature.
-        val newSig = sig(small)
-        if (newSig.rows == prevSig.rows && newSig.hash.compareTo(prevSig.hash) == 0) {
-          // Signature says fixpoint — confirm with the exact set-equality
-          // join. Runs once at convergence (plus ~never on collisions),
-          // not once per round.
-          val changed = small.withColumn("l", lit(1))
-            .join(e.withColumn("r", lit(1)), Seq("src", "dst"), "full_outer")
-            .filter(col("l").isNull || col("r").isNull)
-            .limit(1).count()
-          converged = changed == 0L
-        }
-        prevSig = newSig
+      // Cheap per-round barrier: one aggregate scan materializes the
+      // round's checkpoint and yields the set signature.
+      val newSig = sig(small)
+      if (newSig.rows == prevSig.rows && newSig.hash.compareTo(prevSig.hash) == 0) {
+        // Signature says fixpoint — confirm with the exact set-equality
+        // join. Runs once at convergence (plus ~never on collisions),
+        // not once per round.
+        val changed = small.withColumn("l", lit(1))
+          .join(e.withColumn("r", lit(1)), Seq("src", "dst"), "full_outer")
+          .filter(col("l").isNull || col("r").isNull)
+          .limit(1).count()
+        converged = changed == 0L
       }
+      prevSig = newSig
       val old = e
       e = small
       old.unpersist(blocking = false)
@@ -354,12 +329,16 @@ object ConnectedComponents {
     // At fixpoint every edge is (node -> component root). Attach isolated nodes.
     // Each `comp` row is one row of the union below, so its size is
     // bounded by the union's: 2 rows per pointer and Σ|src| + 3·Σ|dst|
-    // bytes over the pointer set that prevSig describes.
+    // bytes over the pointer set that prevSig describes. The size-gated
+    // broadcast (IterState doc) is used ONLY here: gating the per-round
+    // star joins measured neutral to worse (sf0.1 min-of-3: q19 19.4 vs
+    // 19.7 s, q280 19.3 vs 26.2 s), as ReuseExchange already dedupes the
+    // nbrs shuffle and a broadcast recomputes the star subtree.
     val comp = e.select(col("src").as("id"), col("dst").as("component"))
       .union(e.select(col("dst").as("id"), col("dst").as("component")))
       .groupBy(col("id")).agg(min(col("component")).as("component"))
     val out = n.join(
-      gated(comp, 2 * prevSig.rows, prevSig.srcBytes + 3 * prevSig.dstBytes),
+      IterState.bcastIf(comp, 2 * prevSig.rows, prevSig.srcBytes + 3 * prevSig.dstBytes),
       Seq("id"), "left")
       .select(col("id"), coalesce(col("component"), col("id")).as("component"))
     out

@@ -23,11 +23,9 @@ import org.apache.spark.sql.functions._
   * The gate is ROW- and BYTE-counted, never guessed (round-17: the
   * row-only gate under-priced wide string keys — 2M rows of 255-char
   * ids is ~1 GB, not the ~64 MB the row cap was calibrated for):
-  *  - `rowsCap` defaults to 2,000,000 rows (~64 MB at 32 B of
-  *    long-keyed state per row — the same order as the session's 64 MB
-  *    autoBroadcastJoinThreshold); `spark.graft.iterBroadcastRows`
-  *    overrides it per session (0 disables the hint entirely and
-  *    restores the pre-round-16 all-shuffle plans);
+  *  - the row cap is 2,000,000 rows (~64 MB at 32 B of long-keyed
+  *    state per row — the same order as the session's 64 MB
+  *    autoBroadcastJoinThreshold);
   *  - `bytesCap` defaults to 64 MB of estimated row payload
   *    (`spark.graft.iterBroadcastBytes`; 0 disables the byte gate).
   *    [[bcastIfSmall]] MEASURES the payload — variable-width columns
@@ -45,13 +43,9 @@ import org.apache.spark.sql.functions._
   * are ever wrapped (inner: either; left outer / left anti: right side).
   */
 object IterState {
-  val ConfKey = "spark.graft.iterBroadcastRows"
-  val DefaultCap = 2000000L
+  val RowsCap = 2000000L
   val BytesConfKey = "spark.graft.iterBroadcastBytes"
   val DefaultBytesCap = 64L * 1024 * 1024
-
-  def cap(df: DataFrame): Long =
-    df.sparkSession.conf.getOption(ConfKey).map(_.toLong).getOrElse(DefaultCap)
 
   def bytesCap(df: DataFrame): Long =
     df.sparkSession.conf.getOption(BytesConfKey).map(_.toLong)
@@ -88,11 +82,9 @@ object IterState {
     * i.e. checkpointed/persisted, or a narrow projection/filter of such
     * a frame; the single aggregate job is the price of the decision. */
   def bcastIfSmall(df: DataFrame): DataFrame = {
-    val c = cap(df)
-    if (c <= 0) return df
     val (rows, bytes) = measuredRowsBytes(df)
     val bc = bytesCap(df)
-    if (rows <= c && (bc <= 0 || bytes <= bc)) broadcast(df) else df
+    if (rows <= RowsCap && (bc <= 0 || bytes <= bc)) broadcast(df) else df
   }
 
   /** Broadcast hint gated on a row bound the CALLER already holds (an
@@ -106,8 +98,7 @@ object IterState {
     * no extra job, but prices wide string keys honestly. */
   def bcastIf(df: DataFrame, knownRowsBound: Long,
       knownBytesBound: Long): DataFrame = {
-    val c = cap(df)
-    if (c <= 0 || knownRowsBound > c) return df
+    if (knownRowsBound > RowsCap) return df
     val bc = bytesCap(df)
     if (bc <= 0 || knownBytesBound <= bc) broadcast(df) else df
   }

@@ -66,55 +66,21 @@ object Resolver {
 
   /** Canonicalization table from the decision log: (id, canonical) over
     * all ids present in `nodes`, via connected components on the
-    * effective POSITIVE edges. String ids are hashed to longs for the
-    * CC iteration; the canonical id is the lexicographic minimum of the
-    * cluster's string ids, so the choice is deterministic in the id
-    * domain, not the hash domain.
-    *
-    * The string→long hash is verified collision-free before use: a
-    * 64-bit collision would silently fuse two unrelated clusters, and at
-    * billions of ids the birthday probability is non-negligible (~3% at
-    * 1B). One aggregate checks `count(distinct sid) per nid`; on a
-    * collision we re-hash with an incremented salt (xxhash64(salt, sid))
-    * until the mapping is injective — a linear check, no quadratic
-    * work. */
+    * effective POSITIVE edges. A merge links two ids only when BOTH are
+    * nodes, so every canonical id is itself a node. Components label
+    * each node with the min id under Spark's binary string order, which
+    * is the cluster's canonical id. */
   def canonicalize(nodes: DataFrame, decisions: DataFrame): DataFrame = {
-    val base = nodes.toDF("sid").distinct()
-    var salt = 0
-    var ids: DataFrame = null
-    var injective = false
-    while (!injective) {
-      require(salt < 8, "id hashing failed to become injective after 8 salts")
-      val h = if (salt == 0) xxhash64(col("sid")) else xxhash64(lit(salt), col("sid"))
-      ids = base.withColumn("nid", h)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val collided = ids.groupBy(col("nid"))
-        .agg(countDistinct(col("sid")).as("n"))
-        .filter(col("n") > 1).limit(1).count()
-      injective = collided == 0L
-      if (!injective) ids.unpersist(blocking = false)
-      salt += 1
-    }
-    val eff = effective(decisions).filter(col("judgement") === Positive)
-    val edges = eff
-      .join(ids.select(col("sid").as("a"), col("nid").as("src")), "a")
-      .join(ids.select(col("sid").as("b"), col("nid").as("dst")), "b")
-      .select(col("src"), col("dst"))
-    val cc = ConnectedComponents.run(ids.select(col("nid").as("id")), edges)
-    val labeled = ids.join(cc, ids("nid") === cc("id"))
-      .select(col("sid"), col("component"))
-    val canonical = labeled.groupBy(col("component"))
-      .agg(min(col("sid")).as("canonical"))
-    // the mapping is decision-scoped (small): materialize it eagerly
-    // and release the id-hash cache — the operator is already
-    // action-ful (injectivity probe above), and without the barrier
-    // every standalone canonicalize call left `ids` persisted for the
-    // life of the session (the EdgeDedup rep-cache lesson)
-    val out = labeled.join(canonical, "component")
-      .select(col("sid").as("id"), col("canonical"))
+    val ids = nodes.toDF("id").distinct()
+    val edges = effective(decisions).filter(col("judgement") === Positive)
+      .join(ids.select(col("id").as("a")), Seq("a"), "left_semi")
+      .join(ids.select(col("id").as("b")), Seq("b"), "left_semi")
+      .select(col("a"), col("b"))
+    // the mapping is decision-scoped (small): materialize it eagerly so
+    // callers plan over a leaf, not over the component rounds
+    ConnectedComponents.run(ids, edges)
+      .select(col("id"), col("component").as("canonical"))
       .localCheckpoint(true)
-    ids.unpersist(blocking = false)
-    out
   }
 
   /** P3: schema filter with inheritance closure — restrict a frame to a

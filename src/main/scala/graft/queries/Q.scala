@@ -61,9 +61,9 @@ object Q {
     * session setting unchanged — a cluster keeps its configured
     * parallelism, so this can only ever REDUCE partition count below
     * what the data supports, never tune the job to the local box.
-    * `spark.graft.streamBytesPerStatePartition` (default 4 MiB of raw
-    * landing bytes per state partition) shapes only the small-input
-    * end; anything in the 1-32 MiB range reaches the clamp at scale.
+    * bytesPerPartition (4 MiB of raw landing bytes per state
+    * partition) shapes only the small-input end; anything in the
+    * 1-32 MiB range reaches the clamp at scale.
     *
     * Scope the WHOLE pass section (first drop already landed) in
     * `body`: later passes reuse the checkpoint's frozen partitioning,
@@ -77,8 +77,7 @@ object Q {
       val fs = hp.getFileSystem(hconf)
       if (fs.exists(hp)) fs.getContentSummary(hp).getLength else 0L
     }.sum
-    val per = s.conf.getOption("spark.graft.streamBytesPerStatePartition")
-      .map(_.toLong).getOrElse(4L << 20)
+    val per = 4L << 20
     val key = "spark.sql.shuffle.partitions"
     val cap = s.conf.get(key).toInt
     val n = math.max(1L, math.min((bytes + per - 1) / per, cap.toLong)).toInt

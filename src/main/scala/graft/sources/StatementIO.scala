@@ -82,15 +82,22 @@ object StatementIO {
 
   /** Publish: promote a finished version to `latest` — the reference's
     * archive copy to /datasets/latest (zavod/zavod/publish.py:63-94).
-    * A filesystem-level copy via the Hadoop FS API so it works on any
-    * scheme (local, HDFS, object stores with their committers). */
-  def publishLatest(spark: SparkSession, root: String, version: String): Unit = {
+    * Copies `root/version[/dataset]` to `root/latest[/dataset]`; a
+    * missing source (a run with no products) still creates `latest`, so
+    * the marker records the version. A filesystem-level copy via the
+    * Hadoop FS API so it works on any scheme (local, HDFS, object stores
+    * with their committers). */
+  def publishLatest(spark: SparkSession, root: String, version: String,
+      dataset: String = ""): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val src = new org.apache.hadoop.fs.Path(s"$root/$version")
-    val dst = new org.apache.hadoop.fs.Path(s"$root/latest")
+    def at(v: String) = new org.apache.hadoop.fs.Path(
+      if (dataset.isEmpty) s"$root/$v" else s"$root/$v/$dataset")
+    val src = at(version)
+    val dst = at("latest")
     val fs = src.getFileSystem(conf)
     if (fs.exists(dst)) fs.delete(dst, true)
-    org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, dst, false, conf)
+    if (fs.exists(src)) org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, dst, false, conf)
+    else fs.mkdirs(dst)
     // marker recording which version latest points at
     val out = fs.create(new org.apache.hadoop.fs.Path(dst, "_VERSION"), true)
     out.write(version.getBytes("UTF-8"))

@@ -24,8 +24,7 @@ class ConnectedComponentsSpec extends SparkSpec {
 
   test("long chain engages adaptive pointer jumping and still converges exactly") {
     // 800-node path: star rounds alone need ~log2(800) ≈ 10 rounds, so
-    // the adaptive jump (rounds >= pointerJumpAfter) is exercised; the
-    // answer must be identical to the pure-star run. Gate off: this
+    // the adaptive jump (from round 4) is exercised. Gate off: this
     // test exists to exercise the distributed rounds.
     distributedOnly {
       val nodes = (1L to 800L).toDF("id")
@@ -34,10 +33,6 @@ class ConnectedComponentsSpec extends SparkSpec {
         .as[(Long, Long)].collect().toMap
       assert(out.values.toSet == Set(1L))
       assert(out.keySet == (1L to 800L).toSet)
-      val pureStar = ConnectedComponents.run(nodes, edges,
-        pointerJumpAfter = Int.MaxValue)
-        .as[(Long, Long)].collect().toMap
-      assert(pureStar == out)
     }
   }
 

@@ -79,6 +79,14 @@ class EtlSpec extends SparkSpec {
     assert(read(s"$root/state/t/last_successful_version") === "v1")
   }
 
+  test("the result carries one wall per stage, in run order") {
+    val res = Etl.run(spark, stmts(baseRows, "2025-01-01 00:00:00"), noDecisions,
+      Etl.Config("t", "v1", tmpRoot("stages"), "2025-01-01 00:00:00", exporters = Seq.empty))
+    assert(res.stageSeconds.keys.toSeq === Seq("canonicalize", "enrich", "store",
+      "assemble", "validate", "products", "publish"))
+    assert(res.stageSeconds.values.forall(_ >= 0.0))
+  }
+
   test("fatal GTE assertion aborts before any product is written") {
     val root = tmpRoot("abort")
     val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
