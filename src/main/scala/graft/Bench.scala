@@ -226,12 +226,14 @@ object Bench {
     // dominated by fixed plan/jobsetup overhead, so ratios UNDERSTATE
     // the data-driven exponent; embeddings/documents tables scale less
     // than the TPC-H 10× between these dirs.
+    // The data ratio is measured: the input bytes of the two scale dirs.
     val scalingDir = sys.env.getOrElse("SPARK_GRAFT_SCALING_DIR", "/root/testdata/sf0.01")
-    val dataRatio = sys.env.getOrElse("SPARK_GRAFT_SCALING_RATIO", "10").toDouble
     val flaggedNames = scala.collection.mutable.ListBuffer[String]()
     val scalingJson =
       if (only.nonEmpty || !new java.io.File(scalingDir).isDirectory) "null"
       else {
+        val dataRatio = GraftSession.dirBytes(sfDir).toDouble /
+          math.max(1L, GraftSession.dirBytes(scalingDir))
         // drop suite state: persisted frames (ours and Spark's cache
         // registry) and a forced GC so the re-times start from a clean
         // heap and empty block manager
@@ -276,7 +278,7 @@ object Bench {
           "\"" + name + "\":" +
             f"""{"t_small":$tSmall%.3f,"t_large":$tLarge%.3f,"t_insuite":$tInsuite%.3f,"ratio":$ratio%.2f,"exponent":$expo%.2f,"peak_mem_small_mb":$pkSmall%.1f,"peak_mem_large_mb":$pkLarge%.1f,"retime_capped":$retimeCapped,"retime_anomalous":$anomalous,"flagged":$flagged}"""
         }
-        s"""{"small_sf_dir":"$scalingDir","data_ratio":$dataRatio,""" +
+        f"""{"small_sf_dir":"$scalingDir","data_ratio":$dataRatio%.3f,""" +
           s""""note":"t_large/t_small are fresh post-GC re-times (t_insuite = contaminated suite wall); small-scale walls include fixed per-query overhead so ratios understate the data exponent","queries":${rows.mkString("{", ",", "}")}}"""
       }
 
@@ -357,13 +359,10 @@ object Bench {
     // 2,271-byte tail and BENCH parsed null despite a clean run), so the
     // machine-readable artifact is written — and fsynced — to a stable
     // file that never depends on how much stdout a reader keeps.
-    // The default path resolves against SPARK_GRAFT_REPO_DIR (falling
-    // back to user.dir, which is logged) so the artifact's location no
-    // longer silently depends on the launcher's working directory.
-    val outPath = sys.env.get("SPARK_GRAFT_BENCH_OUT").getOrElse {
-      val root = sys.env.getOrElse("SPARK_GRAFT_REPO_DIR", System.getProperty("user.dir"))
-      new java.io.File(root, "target/bench_latest.json").getPath
-    }
+    // SPARK_GRAFT_BENCH_OUT names the file; the default is
+    // target/bench_latest.json under user.dir, and the path is logged.
+    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
+      new java.io.File(System.getProperty("user.dir"), "target/bench_latest.json").getPath)
     // Never overwrite a good artifact from a dying JVM: a shutdown kill
     // mid-run stops the SparkContext and the remaining "measurements"
     // are instant failures (round-11 forensics).

@@ -1,7 +1,16 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Add, EvalMode, Literal,
+  NumericEvalContext, RaiseError}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType,
+  StructField, StructType}
+import org.apache.spark.storage.StorageLevel
+
+import scala.collection.mutable
 
 /** Graph centrality for corpus curation: PageRank over an entity or
   * host graph ranks nodes by link mass — the FineWeb/CommonCrawl-style
@@ -388,37 +397,49 @@ object Centrality {
 
   /** Per-seed hop distances — labeled multi-source BFS over an
     * unweighted directed edge list, the static twin of
-    * [[earliestArrival]]. Per round only the FRESH frontier (nodes
-    * first reached last round) expands: a node re-reached later always
-    * loses the (seed, node) min, so expanding it again is pure waste —
-    * frontier work per round is bounded by newly-reached pairs, not by
-    * everything reached so far. Returns (seed, node, dist) for
-    * 1 ≤ dist ≤ maxHops; state is |seeds|·|reached|, never path count.
-    * `edges`: (src, dst); `seeds`: one id column. */
+    * [[earliestArrival]]. Returns (seed, node, dist) for
+    * 1 ≤ dist ≤ maxHops; `edges`: (src, dst); `seeds`: one id column.
+    *
+    * Under the local gate ([[localGraph]]) one per-seed kernel runs over
+    * a broadcast CSR: a plain BFS per seed, in two jobs (collect the
+    * edges, run the kernel) for any maxHops. Above it,
+    * one edge-keyed join + one (seed, node) min aggregate per round,
+    * expanding only the FRESH frontier (nodes first reached last round):
+    * a node re-reached later always loses the min, so frontier work per
+    * round is bounded by newly-reached pairs; state is |seeds|·|reached|,
+    * never path count. Both paths give the same rows — including a
+    * (seed, null, first hop) row when a reached node has a null-`dst`
+    * edge; null seeds and null-`src` edges reach nothing. */
   def bfsDistances(edges: DataFrame, seeds: DataFrame,
       maxHops: Int): DataFrame = {
-    val e = edges.select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var reach = seeds.toDF("seed").distinct()
-      .select(col("seed").cast("long").as("seed"),
-        col("seed").cast("long").as("node"), lit(0L).as("dist"))
-    // same serialized spill-safe checkpoint rule as [[earliestArrival]]
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-    (1 to maxHops).foreach { h =>
-      // size-gated frontier broadcast (IterState doc): stream the
-      // persisted edge frame instead of sort-merging it per round
-      val frontier = reach.where(col("dist") === (h - 1))
-      val next = e.join(
-          IterState.bcastIfSmall(frontier.withColumnRenamed("node", "src")),
-          "src")
-        .select(col("seed"), col("dst").as("node"), lit(h.toLong).as("dist"))
-      reach = reach.unionByName(next)
-        .groupBy("seed", "node").agg(min(col("dist")).as("dist"))
-        .localCheckpoint(true, lvl)
+    val op = "Centrality.bfsDistances"
+    val e = normEdges(edges)
+    localGraph(e, op) match {
+      case Some(g) =>
+        runKernel(op, e, g, seeds, Kernel.Distances, maxHops, scale = 0L)
+      case None =>
+        var reach = seeds.toDF("seed").distinct()
+          .select(col("seed").cast("long").as("seed"),
+            col("seed").cast("long").as("node"), lit(0L).as("dist"))
+        // same serialized spill-safe checkpoint rule as [[earliestArrival]]
+        val lvl = StorageLevel.MEMORY_AND_DISK_SER
+        (1 to maxHops).foreach { h =>
+          described(e.sparkSession, s"$op: round $h") {
+            // size-gated frontier broadcast (IterState doc): stream the
+            // persisted edge frame instead of sort-merging it per round
+            val frontier = reach.where(col("dist") === (h - 1))
+            val next = e.join(
+                IterState.bcastIfSmall(frontier.withColumnRenamed("node", "src")),
+                "src")
+              .select(col("seed"), col("dst").as("node"), lit(h.toLong).as("dist"))
+            reach = reach.unionByName(next)
+              .groupBy("seed", "node").agg(min(col("dist")).as("dist"))
+              .localCheckpoint(true, lvl)
+          }
+        }
+        e.unpersist(blocking = false)
+        reach.where(col("dist") > 0L)
     }
-    e.unpersist(blocking = false)
-    reach.where(col("dist") > 0L)
   }
 
   /** Community-quality report: Newman modularity of a labeling, in
@@ -541,57 +562,69 @@ object Centrality {
     * node) pair reached within `maxHops`, the hop distance AND the
     * number σ of distinct shortest paths achieving it. The semiring is
     * (min, +) on distance carrying (sum) on counts: a node first
-    * reached at hop h counts Σ σ(predecessor at h−1) paths — BFS
-    * layers make the path DAG explicit, so counts are one aggregate
-    * per round, never an enumeration (σ grows multiplicatively with
-    * degree, the row count does NOT). Per round only the fresh layer
-    * expands (the [[bfsDistances]] frontier rule) and an anti-join
-    * keeps earlier-reached pairs closed — a re-reach at a LATER hop is
-    * by construction not shortest. State is |seeds|·|reached| rows;
-    * serialized spill-safe round checkpoints as the whole family.
-    * `edges`: (src, dst); `seeds`: one id column.
-    * Returns (seed, node, dist, paths) for 1 ≤ dist ≤ maxHops. */
+    * reached at hop h counts Σ σ(predecessor at h−1) paths, one term
+    * per edge, so parallel edges count as distinct paths; a re-reach at
+    * a LATER hop (a self-loop included) is by construction not shortest
+    * and adds nothing. A null `dst` is never closed: every layer whose
+    * nodes have null-`dst` edges yields its own (seed, null, h, σ) row.
+    * Sums overflow loudly (ANSI). `edges`: (src, dst); `seeds`: one id
+    * column. Returns (seed, node, dist, paths) for 1 ≤ dist ≤ maxHops.
+    *
+    * Under the local gate ([[localGraph]]) this is the per-seed kernel's
+    * forward pass; above it, [[pathCountsFull]]'s join rounds. Both give
+    * the same rows. */
   def shortestPathCounts(edges: DataFrame, seeds: DataFrame,
-      maxHops: Int): DataFrame =
-    pathCountsFull(normEdges(edges), seeds, maxHops, unpersistEdges = true)
-      .where(col("dist") > 0L)
+      maxHops: Int): DataFrame = {
+    val op = "Centrality.shortestPathCounts"
+    val e = normEdges(edges)
+    localGraph(e, op, arithmetic = true) match {
+      case Some(g) =>
+        runKernel(op, e, g, seeds, Kernel.PathCounts, maxHops, scale = 0L)
+      case None =>
+        pathCountsFull(op, e, seeds, maxHops, unpersistEdges = true)
+          .where(col("dist") > 0L)
+    }
+  }
 
   private def normEdges(edges: DataFrame): DataFrame =
     edges.select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK)
 
-  /** [[shortestPathCounts]]' forward pass INCLUDING the dist-0 seed
-    * rows — the layered path-DAG state ([[betweenness]]'s backward
+  /** [[shortestPathCounts]]' join-path forward pass INCLUDING the dist-0
+    * seed rows — the layered path-DAG state ([[betweenness]]'s backward
     * phase needs layer 0 as a dependency target). `e` must already be
     * the normalized persisted (src, dst) frame. */
-  private def pathCountsFull(e: DataFrame, seeds: DataFrame,
+  private def pathCountsFull(op: String, e: DataFrame, seeds: DataFrame,
       maxHops: Int, unpersistEdges: Boolean): DataFrame = {
     var reach = seeds.toDF("seed").distinct()
       .select(col("seed").cast("long").as("seed"),
         col("seed").cast("long").as("node"), lit(0L).as("dist"),
         lit(1L).as("paths"))
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
+    val lvl = StorageLevel.MEMORY_AND_DISK_SER
     (1 to maxHops).foreach { h =>
-      // round state is checkpointed, so Catalyst sees no stats and would
-      // sort-merge every join; the operator counts the materialized
-      // state itself and broadcasts the small side (IterState doc). The
-      // expansion then STREAMS the persisted edge frame — zero Exchange
-      // until the (seed, node) partial aggregate, which map-side-combines
-      // the layer down to its distinct pairs before shuffling.
-      val frontier = reach.where(col("dist") === (h - 1))
-      val fCnt = frontier.count()
-      val layer = e.join(
-          IterState.bcastIf(frontier.withColumnRenamed("node", "src"), fCnt),
-          "src")
-        .groupBy(col("seed"), col("dst").as("node"))
-        .agg(sum(col("paths")).as("paths"))
-      val fresh = layer.join(
-          IterState.bcastIfSmall(reach.select("seed", "node")),
-          Seq("seed", "node"), "left_anti")
-        .select(col("seed"), col("node"), lit(h.toLong).as("dist"),
-          col("paths"))
-      reach = reach.unionByName(fresh).localCheckpoint(true, lvl)
+      described(e.sparkSession, s"$op: round $h") {
+        // round state is checkpointed, so Catalyst sees no stats and
+        // would sort-merge every join; the operator counts the
+        // materialized state itself and broadcasts the small side
+        // (IterState doc). The expansion then STREAMS the persisted edge
+        // frame — zero Exchange until the (seed, node) partial
+        // aggregate, which map-side-combines the layer down to its
+        // distinct pairs before shuffling.
+        val frontier = reach.where(col("dist") === (h - 1))
+        val fCnt = frontier.count()
+        val layer = e.join(
+            IterState.bcastIf(frontier.withColumnRenamed("node", "src"), fCnt),
+            "src")
+          .groupBy(col("seed"), col("dst").as("node"))
+          .agg(sum(col("paths")).as("paths"))
+        val fresh = layer.join(
+            IterState.bcastIfSmall(reach.select("seed", "node")),
+            Seq("seed", "node"), "left_anti")
+          .select(col("seed"), col("node"), lit(h.toLong).as("dist"),
+            col("paths"))
+        reach = reach.unionByName(fresh).localCheckpoint(true, lvl)
+      }
     }
     if (unpersistEdges) e.unpersist(blocking = false)
     reach
@@ -615,18 +648,33 @@ object Centrality {
     * Bounded-round contract (as the whole family): only shortest paths
     * of ≤ maxHops edges count — the terminal layer's dependency is 0,
     * exactly what running Brandes on the maxHops-truncated DAG means.
-    * Parallel edges count as distinct paths, matching the forward σ.
-    * One edge-keyed join + one aggregate per layer in each direction;
-    * state is |seeds|·|reached| rows, never path counts; serialized
-    * spill-safe per-layer checkpoints.
+    * Parallel edges count as distinct paths, matching the forward σ. A
+    * σ·(scale + D) product past BIGINT fails with a `raise_error`
+    * naming σ, D and scale; an overflowing sum fails as ANSI does.
+    *
+    * Under the local gate ([[localGraph]]) the per-seed kernel runs the
+    * forward σ and this backward δ over a broadcast CSR, in two jobs.
+    * Above it, one edge-keyed join + one aggregate per layer in
+    * each direction; state is |seeds|·|reached| rows, never path counts;
+    * serialized spill-safe per-layer checkpoints. Both give the same
+    * rows and the same overflow messages.
     * Returns (seed, node, dist, paths, dep) for 1 ≤ dist ≤ maxHops. */
   def betweenness(edges: DataFrame, seeds: DataFrame, maxHops: Int,
       scale: Long = 1000000L): DataFrame = {
     require(scale > 0, s"scale: $scale")
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
+    val op = "Centrality.betweenness"
     val e = normEdges(edges)
-    val reach = pathCountsFull(e, seeds, maxHops, unpersistEdges = false)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    localGraph(e, op, arithmetic = true) match {
+      case Some(g) => runKernel(op, e, g, seeds, Kernel.Betweenness, maxHops, scale)
+      case None => joinBetweenness(op, e, seeds, maxHops, scale)
+    }
+  }
+
+  private def joinBetweenness(op: String, e: DataFrame, seeds: DataFrame,
+      maxHops: Int, scale: Long): DataFrame = {
+    val lvl = StorageLevel.MEMORY_AND_DISK_SER
+    val reach = pathCountsFull(op, e, seeds, maxHops, unpersistEdges = false)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     // Per-layer row counts off the persisted forward state: ONE
     // aggregate job for all layers (it was one count job per layer —
     // maxHops+1 scheduler round-trips over the same persisted frame),
@@ -637,10 +685,12 @@ object Centrality {
     // per-(seed, node) dependency aggregate partial-combines before
     // its one small shuffle — the unhinted plan sort-merged (shuffle +
     // sort) the FULL expansion once per layer.
-    val layerCnt: Map[Int, Long] = reach.groupBy("dist")
-      .agg(count(lit(1)).as("__n")).collect()
-      .map(r => r.getLong(0).toInt -> r.getLong(1)).toMap
-      .withDefaultValue(0L)
+    val layerCnt: Map[Int, Long] = described(e.sparkSession, s"$op: layer sizes") {
+      reach.groupBy("dist")
+        .agg(count(lit(1)).as("__n")).collect()
+        .map(r => r.getLong(0).toInt -> r.getLong(1)).toMap
+        .withDefaultValue(0L)
+    }
     // backward: deepest layer seeds dep 0; layer h−1 sums its DAG-edge
     // contributions from layer h, left-joined so successor-less nodes
     // keep dep 0
@@ -648,40 +698,42 @@ object Centrality {
       .select(col("seed"), col("node"), lit(0L).as("dep"))
     var acc = dep.withColumn("dist", lit(maxHops.toLong))
     (maxHops to 1 by -1).foreach { h =>
-      val hw = reach.where(col("dist") === h.toLong)
-        .join(IterState.bcastIf(dep, layerCnt(h)), Seq("seed", "node"))
-        .select(col("seed"), col("node").as("dst"),
-          col("paths").as("_pw"), col("dep").as("_dw"))
-      val contrib = e.join(IterState.bcastIf(hw, layerCnt(h)), "dst")
-        .join(IterState.bcastIf(
-            reach.where(col("dist") === (h - 1).toLong)
-              .select(col("seed"), col("node").as("src"),
-                col("paths").as("_pv")),
-            layerCnt(h - 1)),
-          Seq("seed", "src"))
-        .groupBy(col("seed"), col("src").as("node"))
-        // σ·(scale+D) is unchecked BIGINT multiplication; on dense
-        // graphs σ and the scaled dependency can pass Long.MaxValue
-        // and silently wrap, corrupting scores the oracle-replayable
-        // contract promises exact (round-15 advisory) — so the
-        // product is guarded per edge: both factors are positive
-        // (σ ≥ 1, scale > 0, D ≥ 0), overflow iff σ exceeds
-        // Long.MaxValue div (scale+D), and the guard fails LOUDLY
-        // (lower scale or maxHops) instead of wrapping.
-        .agg(sum(expr(
-          s"CASE WHEN _pv > 9223372036854775807L div ($scale + _dw) " +
-            "THEN CAST(raise_error(concat('betweenness: sigma*(scale+dep) " +
-            "overflows BIGINT at sigma=', CAST(_pv AS STRING), " +
-            "', dep=', CAST(_dw AS STRING), " +
-            s"', scale=$scale — lower scale or maxHops')) AS BIGINT) " +
-            s"ELSE (_pv * ($scale + _dw)) div _pw END")).as("dep"))
-      dep = reach.where(col("dist") === (h - 1).toLong)
-        .select(col("seed"), col("node"))
-        .join(IterState.bcastIf(contrib, layerCnt(h - 1)),
-          Seq("seed", "node"), "left")
-        .select(col("seed"), col("node"),
-          coalesce(col("dep"), lit(0L)).as("dep"))
-        .localCheckpoint(true, lvl)
+      described(e.sparkSession, s"$op: backward round $h") {
+        val hw = reach.where(col("dist") === h.toLong)
+          .join(IterState.bcastIf(dep, layerCnt(h)), Seq("seed", "node"))
+          .select(col("seed"), col("node").as("dst"),
+            col("paths").as("_pw"), col("dep").as("_dw"))
+        val contrib = e.join(IterState.bcastIf(hw, layerCnt(h)), "dst")
+          .join(IterState.bcastIf(
+              reach.where(col("dist") === (h - 1).toLong)
+                .select(col("seed"), col("node").as("src"),
+                  col("paths").as("_pv")),
+              layerCnt(h - 1)),
+            Seq("seed", "src"))
+          .groupBy(col("seed"), col("src").as("node"))
+          // σ·(scale+D) is unchecked BIGINT multiplication; on dense
+          // graphs σ and the scaled dependency can pass Long.MaxValue
+          // and silently wrap, corrupting scores the oracle-replayable
+          // contract promises exact (round-15 advisory) — so the
+          // product is guarded per edge: both factors are positive
+          // (σ ≥ 1, scale > 0, D ≥ 0), overflow iff σ exceeds
+          // Long.MaxValue div (scale+D), and the guard fails LOUDLY
+          // (lower scale or maxHops) instead of wrapping.
+          .agg(sum(expr(
+            s"CASE WHEN _pv > 9223372036854775807L div ($scale + _dw) " +
+              "THEN CAST(raise_error(concat('betweenness: sigma*(scale+dep) " +
+              "overflows BIGINT at sigma=', CAST(_pv AS STRING), " +
+              "', dep=', CAST(_dw AS STRING), " +
+              s"', scale=$scale — lower scale or maxHops')) AS BIGINT) " +
+              s"ELSE (_pv * ($scale + _dw)) div _pw END")).as("dep"))
+        dep = reach.where(col("dist") === (h - 1).toLong)
+          .select(col("seed"), col("node"))
+          .join(IterState.bcastIf(contrib, layerCnt(h - 1)),
+            Seq("seed", "node"), "left")
+          .select(col("seed"), col("node"),
+            coalesce(col("dep"), lit(0L)).as("dep"))
+          .localCheckpoint(true, lvl)
+      }
       if (h > 1) acc = acc.unionByName(dep.withColumn("dist", lit((h - 1).toLong)))
     }
     e.unpersist(blocking = false)
@@ -756,5 +808,297 @@ object Centrality {
     sd.unpersist(blocking = false)
     nodes.unpersist(blocking = false)
     ranks
+  }
+
+  // ---- the local seed kernel: bfsDistances, shortestPathCounts and
+  // betweenness under the iteration-state byte gate ----
+
+  private val JobDescription = "spark.job.description"
+
+  /** Runs `body` with `what` as the calling thread's Spark job
+    * description and restores the previous description afterwards. */
+  private def described[T](spark: SparkSession, what: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty(JobDescription)
+    sc.setJobDescription(what)
+    try body finally sc.setLocalProperty(JobDescription, prev)
+  }
+
+  /** A directed multigraph as compressed sparse rows over dense indices.
+    * `ids` are the sorted distinct non-null node ids; node i's out-edges
+    * are `adj(off(i) until off(i + 1))`, one entry per edge row, so
+    * parallel edges repeat. Index `ids.length` stands for a null `dst`:
+    * a node that is reached but never expanded. */
+  private final class Csr(val ids: Array[Long], val off: Array[Int],
+      val adj: Array[Int]) extends Serializable
+
+  /** One partition's (src, dst) rows: its row count, and its edges while
+    * the count is at most `limit` — else null arrays. */
+  private final case class Packed(rows: Long, src: Array[Long],
+      dst: Array[Long], toNull: Array[Long])
+  private object Packed {
+    def apply(it: Iterator[InternalRow], limit: Long): Packed = {
+      val src, dst, toNull = new mutable.ArrayBuilder.ofLong
+      var rows = 0L
+      it.foreach { r =>
+        rows += 1
+        if (rows <= limit && !r.isNullAt(0)) {
+          if (r.isNullAt(1)) toNull += r.getLong(0)
+          else { src += r.getLong(0); dst += r.getLong(1) }
+        }
+      }
+      if (rows > limit) Packed(rows, null, null, null)
+      else Packed(rows, src.result(), dst.result(), toNull.result())
+    }
+  }
+
+  /** The local gate: the CSR of `e` — the normalized, persisted
+    * (src, dst) frame — when `e` has at most [[IterState.RowsCap]] rows
+    * and at most [[IterState.bytesCap]] measured bytes, else None and
+    * the caller runs its join path. This is the iteration-state
+    * broadcast rule (a frame that size is shipped to every executor
+    * whenever a size-gated broadcast fires) and the REPOSE pattern:
+    * replicate the compact index, spread the seeds across tasks.
+    *
+    * Both columns are longs, so the measured bytes are rows × 16. One
+    * job counts every partition and returns its edges too, packed into
+    * primitive arrays, if the partition holds at most its 1/p share of
+    * the gate; so the driver never holds more than the gate, and a
+    * second job collects only the partitions past their share when the
+    * total passes. Edges with a null `src` are dropped: no join path
+    * ever matches them. `arithmetic` kernels also need ANSI mode, whose
+    * overflow errors their exact adds reproduce. */
+  private def localGraph(e: DataFrame, op: String,
+      arithmetic: Boolean = false): Option[Csr] = {
+    val spark = e.sparkSession
+    if (arithmetic && !spark.conf.get("spark.sql.ansi.enabled").toBoolean)
+      return None
+    val rdd = e.queryExecution.toRdd
+    val width = IterState.staticRowWidth(e.schema)
+    val cap = IterState.bytesCap(e)
+    val rowsCap = math.min(IterState.RowsCap, if (cap > 0) cap / width else Long.MaxValue)
+    val share = rowsCap / math.max(1, rdd.getNumPartitions)
+    val first = described(spark, s"$op: collect edges") {
+      rdd.mapPartitions(it => Iterator.single(Packed(it, share))).collect()
+    }
+    if (first.map(_.rows).sum > rowsCap) return None
+    val missing = first.indices.filter(first(_).src == null)
+    val rest = if (missing.isEmpty) Array.empty[Packed] else
+      described(spark, s"$op: collect edges") {
+        spark.sparkContext.runJob(rdd, Packed(_: Iterator[InternalRow], Long.MaxValue), missing)
+      }
+    e.unpersist(blocking = false)
+    val parts = first.filter(_.src != null) ++ rest
+    val src = parts.flatMap(_.src)
+    val dst = parts.flatMap(_.dst)
+    val toNull = parts.flatMap(_.toNull)
+    val all = Array.concat(src, dst, toNull)
+    java.util.Arrays.sort(all)
+    var n = 0
+    all.indices.foreach { i =>
+      if (i == 0 || all(i) != all(i - 1)) { all(n) = all(i); n += 1 }
+    }
+    val ids = java.util.Arrays.copyOf(all, n)
+    def index(id: Long) = java.util.Arrays.binarySearch(ids, id)
+    val from = Array.concat(src, toNull).map(index)
+    val to = Array.concat(dst.map(index), Array.fill(toNull.length)(n))
+    val off = new Array[Int](n + 1)
+    from.foreach(v => off(v + 1) += 1)
+    (0 until n).foreach(v => off(v + 1) += off(v))
+    val next = off.clone()
+    val adj = new Array[Int](from.length)
+    from.indices.foreach { k => adj(next(from(k))) = to(k); next(from(k)) += 1 }
+    Some(new Csr(ids, off, adj))
+  }
+
+  /** What the seed kernel emits per reached (seed, node). */
+  private sealed trait Kernel extends Serializable
+  private object Kernel {
+    /** (seed, node, dist), as [[bfsDistances]]. */
+    case object Distances extends Kernel
+    /** (seed, node, dist, paths), as [[shortestPathCounts]]. */
+    case object PathCounts extends Kernel
+    /** (seed, node, dist, paths, dep), as [[betweenness]]. */
+    case object Betweenness extends Kernel
+
+    /** The join path's output schema. Its nullability follows the
+      * join path's plan: `seed` is the cast seed; `node` is a cast seed
+      * or, after a round, a cast `dst`; `dist` is a literal, or a min
+      * after a round of BFS; `paths` is a sum once a round ran; `dep`
+      * is coalesced. */
+    def schema(k: Kernel, seed: Boolean, dst: Boolean, rounds: Boolean): StructType = {
+      def f(name: String, nullable: Boolean) = StructField(name, LongType, nullable)
+      val keys = Seq(f("seed", seed), f("node", seed || (rounds && dst)))
+      StructType(k match {
+        case Distances => keys :+ f("dist", rounds)
+        case PathCounts => keys ++ Seq(f("dist", false), f("paths", rounds))
+        case Betweenness =>
+          keys ++ Seq(f("dist", false), f("paths", rounds), f("dep", false))
+      })
+    }
+  }
+
+  /** One `mapPartitions` over the distinct, cast seed frame — the join
+    * path's expressions — hash-partitioned into
+    * `spark.sql.shuffle.partitions` partitions, so written outputs keep
+    * their file count. The CSR is broadcast and each task runs
+    * [[SeedRun]] per seed. The result is checkpointed eagerly like every
+    * join-path round, so the kernel's job carries its description.
+    *
+    * An integral seed column casts injectively, so deduplicating the
+    * cast ids is its `distinct()` and saves that query stage. Any other
+    * type runs `distinct()` first, and a cast id that m distinct seeds
+    * share (as "3" and "03" do) starts with σ = m, as the join path's m
+    * dist-0 rows do. */
+  private def runKernel(op: String, e: DataFrame, g: Csr, seeds: DataFrame,
+      k: Kernel, maxHops: Int, scale: Long): DataFrame = {
+    val spark = seeds.sparkSession
+    val raw = seeds.toDF("seed")
+    val injective = raw.schema.head.dataType match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    }
+    val cast = (if (injective) raw else raw.distinct())
+      .select(col("seed").cast("long").as("seed"))
+    val parts = new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    val bg = spark.sparkContext.broadcast(g)
+    described(spark, s"$op: local kernel") {
+      val rows = cast.queryExecution.toRdd
+        .flatMap(r => if (r.isNullAt(0)) None else Some(r.getLong(0) -> 1L))
+        .reduceByKey(parts, _ + _)
+        .mapPartitions { it =>
+          val run = new SeedRun(bg.value, k, maxHops, scale)
+          it.flatMap { case (s, m) => run(s, if (injective) 1L else m) }
+        }
+      spark.createDataFrame(rows, Kernel.schema(k, cast.schema.head.nullable,
+          e.schema("dst").nullable, maxHops > 0))
+        .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
+    }
+  }
+
+  /** The per-seed kernel of one task. Its arrays are sized to the graph
+    * once and reset between seeds by walking only what the last seed
+    * reached. Layer h is `order(layerEnd(h - 1) until layerEnd(h))`.
+    *
+    * It reproduces the join path row for row: hops stop at `maxHops`;
+    * every edge row adds its σ, so parallel edges are distinct paths;
+    * a node reached at an earlier hop (a self-loop included) takes no
+    * further paths; the null node is reached per layer and never
+    * expanded. Backward, each DAG edge adds σ(v)·(scale + D(w)) div σ(w),
+    * floored per edge before the sum. Adds fail as ANSI sums do, and a
+    * product past BIGINT fails with the join path's `raise_error` text. */
+  private final class SeedRun(g: Csr, k: Kernel, maxHops: Int, scale: Long) {
+    private val n = g.ids.length
+    // a BFS adds a node per layer or stops, so layers past n + 1 are empty
+    private val hops = math.max(0, math.min(maxHops, n + 1))
+    private val counting = k != Kernel.Distances
+    private val dist = Array.fill(n)(-1)
+    private val sigma = new Array[Long](n)
+    private val delta = new Array[Long](n)
+    private val order = new Array[Int](n)
+    private val layerEnd = new Array[Int](hops + 1)
+    // σ of the null node per layer; 0 = not reached
+    private val nullPaths = new Array[Long](hops + 1)
+    private var reached = 0
+
+    def apply(seed: Long, m: Long): Iterator[Row] = {
+      val s = java.util.Arrays.binarySearch(g.ids, seed)
+      if (s < 0 || hops == 0) return Iterator.empty
+      val layers = forward(s, m)
+      if (k == Kernel.Betweenness) backward(layers, m)
+      val out = emit(seed, layers)
+      (0 until reached).foreach(i => dist(order(i)) = -1)
+      java.util.Arrays.fill(nullPaths, 0L)
+      out.iterator
+    }
+
+    /** BFS layers 1..L from `s` with σ(s) = m; returns L. */
+    private def forward(s: Int, m: Long): Int = {
+      dist(s) = 0; sigma(s) = m; delta(s) = 0L
+      order(0) = s; reached = 1; layerEnd(0) = 1
+      var start = 0
+      var h = 1
+      while (h <= hops && start < reached) {
+        val end = reached
+        var nul = 0L
+        (start until end).foreach { i =>
+          val v = order(i)
+          val sv = sigma(v)
+          (g.off(v) until g.off(v + 1)).foreach { j =>
+            val w = g.adj(j)
+            if (w == n) nul = if (counting) add(nul, sv) else 1L
+            else if (dist(w) < 0) {
+              dist(w) = h; sigma(w) = sv; delta(w) = 0L
+              order(reached) = w; reached += 1
+            } else if (counting && dist(w) == h) sigma(w) = add(sigma(w), sv)
+          }
+        }
+        layerEnd(h) = reached
+        nullPaths(h) = nul
+        start = end
+        h += 1
+      }
+      h - 1
+    }
+
+    /** Brandes' dependencies from layer `layers` back to the seed. The
+      * seed's own δ is never emitted; it is summed only so that it
+      * overflows where the join path's m dist-0 rows (σ 1 each) do. */
+    private def backward(layers: Int, m: Long): Unit =
+      (layers to 1 by -1).foreach { h =>
+        (if (h == 1) 0 else layerEnd(h - 2)).until(layerEnd(h - 1)).foreach { i =>
+          val v = order(i)
+          val sv = if (h == 1) 1L else sigma(v)
+          var acc = 0L
+          (g.off(v) until g.off(v + 1)).foreach { j =>
+            val w = g.adj(j)
+            if (w != n && dist(w) == h) {
+              val sd = add(scale, delta(w))
+              if (sv > Long.MaxValue / sd)
+                raise(s"betweenness: sigma*(scale+dep) overflows BIGINT at sigma=$sv, " +
+                  s"dep=${delta(w)}, scale=$scale — lower scale or maxHops")
+              acc = add(acc, sv * sd / sigma(w))
+            }
+          }
+          delta(v) = if (h == 1) (1L until m).foldLeft(acc)((a, _) => add(a, acc)) else acc
+        }
+      }
+
+    private def emit(seed: Long, layers: Int): mutable.ArrayBuffer[Row] = {
+      val out = new mutable.ArrayBuffer[Row](reached)
+      var nullSeen = false
+      (1 to layers).foreach { h =>
+        (layerEnd(h - 1) until layerEnd(h)).foreach { i =>
+          val v = order(i)
+          out += (k match {
+            case Kernel.Distances => Row(seed, g.ids(v), h.toLong)
+            case Kernel.PathCounts => Row(seed, g.ids(v), h.toLong, sigma(v))
+            case Kernel.Betweenness => Row(seed, g.ids(v), h.toLong, sigma(v), delta(v))
+          })
+        }
+        if (nullPaths(h) != 0L) k match {
+          case Kernel.Distances if !nullSeen => out += Row(seed, null, h.toLong)
+          case Kernel.PathCounts => out += Row(seed, null, h.toLong, nullPaths(h))
+          case _ =>
+        }
+        nullSeen ||= nullPaths(h) != 0L
+      }
+      out
+    }
+  }
+
+  /** a + b, failing as an ANSI BIGINT sum does: on overflow it
+    * evaluates Spark's own ANSI `Add`, which throws Spark's error. */
+  private def add(a: Long, b: Long): Long = {
+    val r = a + b
+    if (((a ^ r) & (b ^ r)) < 0)
+      Add(Literal(a), Literal(b), NumericEvalContext(EvalMode.ANSI)).eval()
+    r
+  }
+
+  /** Throws what `raise_error(message)` throws, by evaluating it. */
+  private def raise(message: String): Nothing = {
+    new RaiseError(Literal(message)).eval()
+    throw new IllegalStateException(message)
   }
 }
