@@ -1,14 +1,15 @@
 package graft.operators
 
 import org.apache.spark.HashPartitioner
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.expressions.{Add, EvalMode, Literal,
   NumericEvalContext, RaiseError}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType,
   StructField, StructType}
 import org.apache.spark.storage.StorageLevel
+
+import LocalGraph.described
 
 import scala.collection.mutable
 
@@ -813,17 +814,6 @@ object Centrality {
   // ---- the local seed kernel: bfsDistances, shortestPathCounts and
   // betweenness under the iteration-state byte gate ----
 
-  private val JobDescription = "spark.job.description"
-
-  /** Runs `body` with `what` as the calling thread's Spark job
-    * description and restores the previous description afterwards. */
-  private def described[T](spark: SparkSession, what: String)(body: => T): T = {
-    val sc = spark.sparkContext
-    val prev = sc.getLocalProperty(JobDescription)
-    sc.setJobDescription(what)
-    try body finally sc.setLocalProperty(JobDescription, prev)
-  }
-
   /** A directed multigraph as compressed sparse rows over dense indices.
     * `ids` are the sorted distinct non-null node ids; node i's out-edges
     * are `adj(off(i) until off(i + 1))`, one entry per edge row, so
@@ -832,83 +822,25 @@ object Centrality {
   private final class Csr(val ids: Array[Long], val off: Array[Int],
       val adj: Array[Int]) extends Serializable
 
-  /** One partition's (src, dst) rows: its row count, and its edges while
-    * the count is at most `limit` — else null arrays. */
-  private final case class Packed(rows: Long, src: Array[Long],
-      dst: Array[Long], toNull: Array[Long])
-  private object Packed {
-    def apply(it: Iterator[InternalRow], limit: Long): Packed = {
-      val src, dst, toNull = new mutable.ArrayBuilder.ofLong
-      var rows = 0L
-      it.foreach { r =>
-        rows += 1
-        if (rows <= limit && !r.isNullAt(0)) {
-          if (r.isNullAt(1)) toNull += r.getLong(0)
-          else { src += r.getLong(0); dst += r.getLong(1) }
-        }
-      }
-      if (rows > limit) Packed(rows, null, null, null)
-      else Packed(rows, src.result(), dst.result(), toNull.result())
-    }
-  }
-
   /** The local gate: the CSR of `e` — the normalized, persisted
-    * (src, dst) frame — when `e` has at most [[IterState.RowsCap]] rows
-    * and at most [[IterState.bytesCap]] measured bytes, else None and
-    * the caller runs its join path. This is the iteration-state
-    * broadcast rule (a frame that size is shipped to every executor
-    * whenever a size-gated broadcast fires) and the REPOSE pattern:
-    * replicate the compact index, spread the seeds across tasks.
-    *
-    * Both columns are longs, so the measured bytes are rows × 16. One
-    * job counts every partition and returns its edges too, packed into
-    * primitive arrays, if the partition holds at most its 1/p share of
-    * the gate; so the driver never holds more than the gate, and a
-    * second job collects only the partitions past their share when the
-    * total passes. Edges with a null `src` are dropped: no join path
-    * ever matches them. `arithmetic` kernels also need ANSI mode, whose
-    * overflow errors their exact adds reproduce. */
+    * (src, dst) frame — when [[LocalGraph.gated]] collects it, else None
+    * and the caller runs its join path. `arithmetic` kernels also need
+    * ANSI mode, whose overflow errors their exact adds reproduce. */
   private def localGraph(e: DataFrame, op: String,
       arithmetic: Boolean = false): Option[Csr] = {
-    val spark = e.sparkSession
-    if (arithmetic && !spark.conf.get("spark.sql.ansi.enabled").toBoolean)
+    if (arithmetic && !e.sparkSession.conf.get("spark.sql.ansi.enabled").toBoolean)
       return None
-    val rdd = e.queryExecution.toRdd
-    val width = IterState.staticRowWidth(e.schema)
-    val cap = IterState.bytesCap(e)
-    val rowsCap = math.min(IterState.RowsCap, if (cap > 0) cap / width else Long.MaxValue)
-    val share = rowsCap / math.max(1, rdd.getNumPartitions)
-    val first = described(spark, s"$op: collect edges") {
-      rdd.mapPartitions(it => Iterator.single(Packed(it, share))).collect()
+    LocalGraph.gated(e, s"$op: collect edges").map { g =>
+      e.unpersist(blocking = false)
+      val n = g.ids.length
+      val off = new Array[Int](n + 1)
+      g.from.foreach(v => off(v + 1) += 1)
+      (0 until n).foreach(v => off(v + 1) += off(v))
+      val next = off.clone()
+      val adj = new Array[Int](g.from.length)
+      g.from.indices.foreach { k => adj(next(g.from(k))) = g.to(k); next(g.from(k)) += 1 }
+      new Csr(g.ids, off, adj)
     }
-    if (first.map(_.rows).sum > rowsCap) return None
-    val missing = first.indices.filter(first(_).src == null)
-    val rest = if (missing.isEmpty) Array.empty[Packed] else
-      described(spark, s"$op: collect edges") {
-        spark.sparkContext.runJob(rdd, Packed(_: Iterator[InternalRow], Long.MaxValue), missing)
-      }
-    e.unpersist(blocking = false)
-    val parts = first.filter(_.src != null) ++ rest
-    val src = parts.flatMap(_.src)
-    val dst = parts.flatMap(_.dst)
-    val toNull = parts.flatMap(_.toNull)
-    val all = Array.concat(src, dst, toNull)
-    java.util.Arrays.sort(all)
-    var n = 0
-    all.indices.foreach { i =>
-      if (i == 0 || all(i) != all(i - 1)) { all(n) = all(i); n += 1 }
-    }
-    val ids = java.util.Arrays.copyOf(all, n)
-    def index(id: Long) = java.util.Arrays.binarySearch(ids, id)
-    val from = Array.concat(src, toNull).map(index)
-    val to = Array.concat(dst.map(index), Array.fill(toNull.length)(n))
-    val off = new Array[Int](n + 1)
-    from.foreach(v => off(v + 1) += 1)
-    (0 until n).foreach(v => off(v + 1) += off(v))
-    val next = off.clone()
-    val adj = new Array[Int](from.length)
-    from.indices.foreach { k => adj(next(from(k))) = to(k); next(from(k)) += 1 }
-    Some(new Csr(ids, off, adj))
   }
 
   /** What the seed kernel emits per reached (seed, node). */

@@ -1,8 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
+
+import scala.collection.mutable
 
 /** Distributed connected components (R1): the resolver's union-find over
   * judgement edges (zavod/zavod/integration/dedupe.py:22-39,93-128) as an
@@ -26,65 +30,12 @@ import org.apache.spark.storage.StorageLevel
   *    A signature collision (~2⁻⁶⁴ per check) can therefore cost one
   *    wasted exact join, never a wrong answer — the loop only exits on
   *    the exact check. This replaced an every-round full-outer join that
-  *    dominated the iteration cost (~3× the per-round work at sf0.1).
+  *    dominated the iteration cost (~3× the per-round work at sf0.1);
+  *  - a pointer set that passes the one graph gate ([[LocalGraph]]), at
+  *    entry or after any round, is collected once and finished by a
+  *    driver union-find into the fixpoint the rounds would reach.
   */
 object ConnectedComponents {
-
-  /** Local-finish gate: when the canonical pointer set has at most this
-    * many rows, the fixpoint is finished on the driver with union-find
-    * instead of more distributed star rounds. 0 disables.
-    *
-    * Why this is a scale optimization and not a local-mode cheat: the
-    * bound equals [[IterState.RowsCap]] — a frame this size is
-    * already collected TO the driver (and shipped to every executor)
-    * whenever the size-gated broadcast fires, so solving it there costs
-    * strictly less memory than the broadcast path the operator already
-    * takes, and replaces O(log² n) further rounds — each several
-    * Exchanges plus a materialization barrier over the whole cluster —
-    * with one collect. This is also reference parity: the resolver the
-    * operator models IS an in-memory union-find over the decision
-    * journal (nomenklatura integration/dedupe.py), which is always
-    * journal-sized, never corpus-sized. At 100 TB, inputs whose pointer
-    * set exceeds the gate run the distributed rounds unchanged until
-    * contraction brings them under it. */
-  val LocalSolveConfKey = "spark.graft.ccLocalSolveEdges"
-  val LocalSolveDefault: Long = IterState.RowsCap
-
-  /** Byte companion to the row gate (round-17, VERDICT r16 #2): the row
-    * cap alone was calibrated for long keys (~32 MB of keys at 2M rows)
-    * but a 2M-row pointer set of 255-char STRING ids is ~1 GB at
-    * `collect()` — `spark.driver.maxResultSize` territory. The
-    * signature scan that already prices the row gate now also sums the
-    * actual key octets (same single aggregate), and the local finish
-    * requires BOTH `rows <= ccLocalSolveEdges` AND
-    * `key bytes <= ccLocalSolveBytes` (default 256 MB of raw key bytes
-    * — a few hundred MB of boxed driver heap, well under the 2 GB
-    * maxResultSize; 0 disables the byte gate). Fixed-width keys price
-    * exactly (rows × 2 × width); only string keys need the measured
-    * sum. */
-  val LocalSolveBytesConfKey = "spark.graft.ccLocalSolveBytes"
-  val LocalSolveBytesDefault: Long = 256L * 1024 * 1024
-
-  private def localSolveCap(spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.getOption(LocalSolveConfKey).map(_.toLong)
-      .getOrElse(LocalSolveDefault)
-
-  private def localSolveBytesCap(spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.getOption(LocalSolveBytesConfKey).map(_.toLong)
-      .getOrElse(LocalSolveBytesDefault)
-
-  /** Key types the driver-side finisher supports: orderings below are
-    * exactly Spark's (numeric; UTF8String binary = unsigned UTF-8 byte
-    * comparison), so min-labels match the distributed rounds bit-for-
-    * bit. Any other key type keeps the distributed path. */
-  private def localSolvable(dt: org.apache.spark.sql.types.DataType): Boolean =
-    dt match {
-      case org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.StringType => true
-      case _ => false
-    }
 
   /** Signature of a pointer set: its rows, the sum of its edge hashes
     * (the convergence check) and the octets of its src and dst keys. */
@@ -93,89 +44,49 @@ object ConnectedComponents {
     def keyBytes: Long = srcBytes + dstBytes
   }
 
-  /** Driver union-find over a gate-small pointer set. Input `e` is the
-    * current canonical (src > dst) edge frame; output is the FIXPOINT
-    * pointer set — one (member, min-label) row per non-root member —
-    * i.e. exactly the frame the distributed rounds converge to, so the
-    * downstream component derivation is unchanged — with its signature
-    * (hash unset: nothing checks convergence after a local finish). */
-  private def localSolve(e: DataFrame, fixedKeyWidth: Long): (DataFrame, Sig) = {
-    import org.apache.spark.sql.types._
+  /** Union-find over a gate-small pointer set, collected by
+    * [[LocalGraph.collect]]. Input `e` is the current canonical
+    * (src > dst) edge frame; output is the FIXPOINT pointer set — one
+    * (member, min-label) row per non-root member, exactly the frame the
+    * star rounds converge to — with its signature (hash unset: nothing
+    * checks convergence after a local finish). The ids come sorted in
+    * Spark's order and every union links the larger root under the
+    * smaller, so each root is its set's smallest index: the min label. */
+  private def localFinish[K](e: DataFrame, key: LocalGraph.Key[K],
+      fixedKeyWidth: Long): (DataFrame, Sig) = {
     val spark = e.sparkSession
-    val dt = e.schema("src").dataType
-    val rows = e.select(col("src"), col("dst")).collect()
-    // node -> dense index
-    val idx = new java.util.HashMap[Any, Integer](rows.length * 2)
-    val keys = new scala.collection.mutable.ArrayBuffer[Any](rows.length * 2)
-    val parent = new scala.collection.mutable.ArrayBuffer[Int](rows.length * 2)
-    val rank = new scala.collection.mutable.ArrayBuffer[Byte](rows.length * 2)
-    def nodeId(k: Any): Int = {
-      val got = idx.get(k)
-      if (got != null) got.intValue()
-      else {
-        val i = keys.length
-        idx.put(k, Integer.valueOf(i)); keys += k; parent += i; rank += 0
-        i
-      }
-    }
+    val g = LocalGraph.collect(e, key, "ConnectedComponents.run: local finish")
+    val parent = Array.range(0, g.ids.length)
     def find(x0: Int): Int = {
       var x = x0
       while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
       x
     }
-    rows.foreach { r =>
-      val a = find(nodeId(r.get(0))); val b = find(nodeId(r.get(1)))
-      if (a != b) {
-        if (rank(a) < rank(b)) parent(a) = b
-        else if (rank(b) < rank(a)) parent(b) = a
-        else { parent(b) = a; rank(a) = (rank(a) + 1).toByte }
-      }
+    g.from.indices.foreach { k =>
+      val a = find(g.from(k)); val b = find(g.to(k))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
     }
-    // Spark-identical key ordering for the min label
-    val lt: (Any, Any) => Boolean = dt match {
-      case LongType => (a, b) => a.asInstanceOf[Long] < b.asInstanceOf[Long]
-      case IntegerType => (a, b) => a.asInstanceOf[Int] < b.asInstanceOf[Int]
-      case ShortType => (a, b) => a.asInstanceOf[Short] < b.asInstanceOf[Short]
-      case StringType => (a, b) =>
-        java.util.Arrays.compareUnsigned(
-          a.asInstanceOf[String].getBytes("UTF-8"),
-          b.asInstanceOf[String].getBytes("UTF-8")) < 0
-      case other => throw new IllegalStateException(
-        s"localSolve on unsupported key type $other")
-    }
-    val minOf = new java.util.HashMap[Int, Any]()
-    var i = 0
-    while (i < keys.length) {
+    def value(k: K): Any = k match { case s: UTF8String => s.toString; case v => v }
+    def octets(k: K): Long = k match { case s: UTF8String => s.numBytes; case _ => fixedKeyWidth }
+    val out = mutable.ArrayBuffer[Row]()
+    var srcBytes, dstBytes = 0L
+    g.ids.indices.foreach { i =>
       val r = find(i)
-      val cur = minOf.get(r)
-      if (cur == null || lt(keys(i), cur)) minOf.put(r, keys(i))
-      i += 1
-    }
-    val out = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row]()
-    def octets(k: Any): Long = k match {
-      case s: String => s.getBytes("UTF-8").length.toLong
-      case _ => fixedKeyWidth
-    }
-    var srcBytes = 0L
-    var dstBytes = 0L
-    i = 0
-    while (i < keys.length) {
-      val m = minOf.get(find(i))
-      if (keys(i) != m) {
-        out += org.apache.spark.sql.Row(keys(i), m)
-        srcBytes += octets(keys(i)); dstBytes += octets(m)
+      if (r != i) {
+        out += Row(value(g.ids(i)), value(g.ids(r)))
+        srcBytes += octets(g.ids(i)); dstBytes += octets(g.ids(r))
       }
-      i += 1
     }
     // RDD-backed, not LocalRelation: a gate-sized (≤ millions of rows)
     // LocalRelation would ride along inside every downstream plan copy;
     // as an RDD leaf it is just a reference (the final attach broadcast-
     // gates it by the known bound, so the missing stats cost nothing).
     val slices = math.max(1, out.length / 500000)
-    (spark.createDataFrame(
-      spark.sparkContext.parallelize(out.toSeq, slices),
-      StructType(Seq(StructField("src", dt), StructField("dst", dt)))),
-      Sig(out.length.toLong, java.math.BigDecimal.ZERO, srcBytes, dstBytes))
+    val dt = e.schema("src").dataType
+    val solved = spark.createDataFrame(spark.sparkContext.parallelize(out.toSeq, slices),
+        StructType(Seq(StructField("src", key.dataType), StructField("dst", key.dataType))))
+      .select(col("src").cast(dt).as("src"), col("dst").cast(dt).as("dst"))
+    (solved, Sig(out.length.toLong, java.math.BigDecimal.ZERO, srcBytes, dstBytes))
   }
 
   /** Round cap of the star iteration. */
@@ -195,7 +106,9 @@ object ConnectedComponents {
     * unmaterialized round would be recomputed multiplicatively by the
     * next one — measured several times SLOWER when the barrier was
     * skipped. The check is a cheap hash-signature aggregate (see class
-    * doc), so the barrier costs one scan, not a join. */
+    * doc), so the barrier costs one scan, not a join. The signature also
+    * prices the [[LocalGraph]] gate, under which [[localFinish]] ends the
+    * iteration with the same output. */
   def run(nodes: DataFrame, edges: DataFrame): DataFrame = {
     val spark = nodes.sparkSession
 
@@ -218,8 +131,7 @@ object ConnectedComponents {
     // Over distinct pointer sets, two different sets collide with
     // probability ~2⁻⁶⁴ per comparison; a collision costs one wasted
     // exact check below, never a wrong result.
-    val keyIsString =
-      e.schema("src").dataType == org.apache.spark.sql.types.StringType
+    val keyIsString = e.schema("src").dataType == StringType
     val fixedKeyWidth = e.schema("src").dataType.defaultSize.toLong
     def sig(df: DataFrame): Sig = {
       def octets(c: String) =
@@ -234,95 +146,84 @@ object ConnectedComponents {
         else if (r.isNullAt(i)) 0L else r.getLong(i)
       Sig(r.getLong(0), s, kb(2), kb(3))
     }
-    var prevSig = sig(e) // materialize once so each round starts cached
+    // materialize once so each round starts cached
+    var prevSig = LocalGraph.described(spark, "ConnectedComponents.run: round 0")(sig(e))
 
     var converged = false
     var iter = 0
-    val localCap = localSolveCap(spark)
-    val localBytesCap = localSolveBytesCap(spark)
-    val canLocal = localCap > 0 && localSolvable(e.schema("src").dataType)
+    val key = LocalGraph.Key.of(e.schema("src").dataType)
     while (!converged && iter < MaxIterations) {
-      // Local finish (see LocalSolveConfKey doc): the signature scan
-      // that ends every round already carries the pointer-set
-      // cardinality AND its key bytes, so the gate decision is free.
-      // Fires at entry for gate-small inputs (the resolver's
-      // journal-sized graphs) and mid-iteration once contraction brings
-      // a big graph under the bounds; the fixpoint pointer set it
-      // produces is bit-identical to what the remaining star rounds
-      // would converge to (spec-asserted both ways), so the derivation
-      // below is unchanged. Both gates must pass: rows (union-find
-      // array sizing) and key bytes (collect()/driver-heap sizing —
-      // see LocalSolveBytesConfKey).
-      if (canLocal && prevSig.rows <= localCap &&
-          (localBytesCap <= 0 || prevSig.keyBytes <= localBytesCap)) {
-        val (solved, solvedSig) = localSolve(e, fixedKeyWidth)
+      // Local finish (class doc): the signature that ends every round
+      // already prices the gate, so deciding it costs no job.
+      if (key.isDefined && LocalGraph.fits(spark, prevSig.rows, prevSig.keyBytes)) {
+        val (solved, solvedSig) = localFinish(e, key.get, fixedKeyWidth)
         e.unpersist(blocking = false)
         e = solved
         prevSig = solvedSig
         converged = true
-      } else {
-      // Large-star: for each node u, connect every strictly-larger
-      // neighbor to m = min(N(u) ∪ {u}).
-      val nbrs = e.select(col("src").as("u"), col("dst").as("v"))
-        .union(e.select(col("dst").as("u"), col("src").as("v")))
-      val minN = nbrs.groupBy(col("u")).agg(min(col("v")).as("mn"))
-        .select(col("u"), least(col("u"), col("mn")).as("m"))
-      val large = nbrs.join(minN, "u")
-        .filter(col("v") > col("u"))
-        .select(col("v").as("src"), col("m").as("dst"))
-        .filter(col("src") =!= col("dst"))
+      } else LocalGraph.described(spark, s"ConnectedComponents.run: round ${iter + 1}") {
+        // Large-star: for each node u, connect every strictly-larger
+        // neighbor to m = min(N(u) ∪ {u}).
+        val nbrs = e.select(col("src").as("u"), col("dst").as("v"))
+          .union(e.select(col("dst").as("u"), col("src").as("v")))
+        val minN = nbrs.groupBy(col("u")).agg(min(col("v")).as("mn"))
+          .select(col("u"), least(col("u"), col("mn")).as("m"))
+        val large = nbrs.join(minN, "u")
+          .filter(col("v") > col("u"))
+          .select(col("v").as("src"), col("m").as("dst"))
+          .filter(col("src") =!= col("dst"))
 
-      // Small-star: for each node u, connect every neighbor <= u (and u)
-      // to the min of those. `large` emits (src > dst) rows only, so no
-      // re-canonicalization is needed.
-      val nbrsS = large.select(col("src").as("u"), col("dst").as("v"))
-      val minS = nbrsS.groupBy(col("u")).agg(min(col("v")).as("m"))
-      val small0 = nbrsS.join(minS, "u")
-        .select(col("v").as("src"), col("m").as("dst"))
-        .union(minS.select(col("u").as("src"), col("m").as("dst")))
-        .filter(col("src") =!= col("dst"))
-        .select(least(col("src"), col("dst")).as("dst2"),
-          greatest(col("src"), col("dst")).as("src2"))
-        .select(col("src2").as("src"), col("dst2").as("dst"))
-        .distinct()
-      // Pointer jump: (u→p) with (p→gp) contracts to (u→gp) — one extra
-      // self-join per round that shortcuts long parent chains. Adaptive:
-      // on short-diameter graphs (cliques, short paths) the star rounds
-      // alone converge within a few iterations and the extra shuffle
-      // would be pure cost, so the first `PointerJumpAfter` rounds never
-      // jump; a loop still going after that is evidence of a
-      // diameter-heavy graph (long chains), where each jump round
-      // contracts depth ~3× instead of ~2× and pays for itself.
-      val small1 =
-        if (iter < PointerJumpAfter) small0
-        else {
-          val parents = small0.select(col("src").as("_p"), col("dst").as("_gp"))
-          small0.join(parents, col("dst") === col("_p"), "left")
-            .select(col("src"), coalesce(col("_gp"), col("dst")).as("dst"))
-            .filter(col("src") =!= col("dst"))
-            .distinct()
+        // Small-star: for each node u, connect every neighbor <= u (and u)
+        // to the min of those. `large` emits (src > dst) rows only, so no
+        // re-canonicalization is needed.
+        val nbrsS = large.select(col("src").as("u"), col("dst").as("v"))
+        val minS = nbrsS.groupBy(col("u")).agg(min(col("v")).as("m"))
+        val small0 = nbrsS.join(minS, "u")
+          .select(col("v").as("src"), col("m").as("dst"))
+          .union(minS.select(col("u").as("src"), col("m").as("dst")))
+          .filter(col("src") =!= col("dst"))
+          .select(least(col("src"), col("dst")).as("dst2"),
+            greatest(col("src"), col("dst")).as("src2"))
+          .select(col("src2").as("src"), col("dst2").as("dst"))
+          .distinct()
+        // Pointer jump: (u→p) with (p→gp) contracts to (u→gp) — one extra
+        // self-join per round that shortcuts long parent chains. Adaptive:
+        // on short-diameter graphs (cliques, short paths) the star rounds
+        // alone converge within a few iterations and the extra shuffle
+        // would be pure cost, so the first `PointerJumpAfter` rounds never
+        // jump; a loop still going after that is evidence of a
+        // diameter-heavy graph (long chains), where each jump round
+        // contracts depth ~3× instead of ~2× and pays for itself.
+        val small1 =
+          if (iter < PointerJumpAfter) small0
+          else {
+            val parents = small0.select(col("src").as("_p"), col("dst").as("_gp"))
+            small0.join(parents, col("dst") === col("_p"), "left")
+              .select(col("src"), coalesce(col("_gp"), col("dst")).as("dst"))
+              .filter(col("src") =!= col("dst"))
+              .distinct()
+          }
+        val small = small1.localCheckpoint(eager = false)
+          .persist(StorageLevel.MEMORY_AND_DISK)
+
+        // Cheap per-round barrier: one aggregate scan materializes the
+        // round's checkpoint and yields the set signature.
+        val newSig = sig(small)
+        if (newSig.rows == prevSig.rows && newSig.hash.compareTo(prevSig.hash) == 0) {
+          // Signature says fixpoint — confirm with the exact set-equality
+          // join. Runs once at convergence (plus ~never on collisions),
+          // not once per round.
+          val changed = small.withColumn("l", lit(1))
+            .join(e.withColumn("r", lit(1)), Seq("src", "dst"), "full_outer")
+            .filter(col("l").isNull || col("r").isNull)
+            .limit(1).count()
+          converged = changed == 0L
         }
-      val small = small1.localCheckpoint(eager = false)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-
-      // Cheap per-round barrier: one aggregate scan materializes the
-      // round's checkpoint and yields the set signature.
-      val newSig = sig(small)
-      if (newSig.rows == prevSig.rows && newSig.hash.compareTo(prevSig.hash) == 0) {
-        // Signature says fixpoint — confirm with the exact set-equality
-        // join. Runs once at convergence (plus ~never on collisions),
-        // not once per round.
-        val changed = small.withColumn("l", lit(1))
-          .join(e.withColumn("r", lit(1)), Seq("src", "dst"), "full_outer")
-          .filter(col("l").isNull || col("r").isNull)
-          .limit(1).count()
-        converged = changed == 0L
-      }
-      prevSig = newSig
-      val old = e
-      e = small
-      old.unpersist(blocking = false)
-      iter += 1
+        prevSig = newSig
+        val old = e
+        e = small
+        old.unpersist(blocking = false)
+        iter += 1
       }
     }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Size-gated broadcast for ITERATION-STATE frames — guide §3.1 ("pick
@@ -8,17 +8,17 @@ import org.apache.spark.sql.functions._
   * applied to the engine's iterative operators.
   *
   * Every iterative operator here cuts lineage per round with
-  * `localCheckpoint`, so round state reaches Catalyst as an RDD-backed
-  * leaf with NO size statistics: the planner prices it at
-  * `defaultSizeInBytes` (effectively infinite) and picks a sort-merge
-  * join every time. The persisted edge frame is then re-shuffled and
-  * re-sorted EVERY round against a state frame that is often a few
-  * thousand rows (a 30-seed BFS frontier, a per-round label frame, a
-  * rank vector). The operator — unlike the planner — knows the state is
-  * materialized, so counting it costs one metadata-cheap job; with the
-  * count in hand it makes the broadcast decision itself, which is
-  * exactly the manual join-strategy rule the optimization guide
-  * prescribes when statistics cannot reach the planner.
+  * `localCheckpoint`. In Spark 4.1.2 the checkpoint leaf keeps the
+  * origin plan's ESTIMATED statistics, which are wrong rather than
+  * missing, and compound from round to round: a 10-row join+aggregate
+  * checkpoints as `sizeInBytes=3.1 MiB`. So the planner cannot be trusted
+  * to see that the persisted edge frame is joined against a state frame
+  * of a few thousand rows (a 30-seed BFS frontier, a per-round label
+  * frame, a rank vector). The operator, unlike the planner, knows the
+  * state is materialized, so counting it costs one metadata-cheap job;
+  * with the count in hand it makes the broadcast decision itself, the
+  * manual join-strategy rule the optimization guide prescribes when
+  * statistics cannot reach the planner.
   *
   * The gate is ROW- and BYTE-counted, never guessed (round-17: the
   * row-only gate under-priced wide string keys — 2M rows of 255-char
@@ -38,6 +38,8 @@ import org.apache.spark.sql.functions._
   *  - the decision re-evaluates EVERY round, so a growing frontier
   *    falls back to the shuffle plan the moment it outgrows either cap
   *    — scale behaviour is graceful, not cliff-edged.
+  * The rule itself is [[LocalGraph.fits]], which also decides when a
+  * graph operator collects its graph and solves it locally.
   *
   * Only sides that are legal build sides for the join type in question
   * are ever wrapped (inner: either; left outer / left anti: right side).
@@ -47,9 +49,8 @@ object IterState {
   val BytesConfKey = "spark.graft.iterBroadcastBytes"
   val DefaultBytesCap = 64L * 1024 * 1024
 
-  def bytesCap(df: DataFrame): Long =
-    df.sparkSession.conf.getOption(BytesConfKey).map(_.toLong)
-      .getOrElse(DefaultBytesCap)
+  def bytesCap(spark: SparkSession): Long =
+    spark.conf.getOption(BytesConfKey).map(_.toLong).getOrElse(DefaultBytesCap)
 
   /** Static per-row width of a schema: fixed-width types at their
     * Catalyst defaultSize (long 8, double 8, ...), variable-width ones
@@ -83,8 +84,7 @@ object IterState {
     * a frame; the single aggregate job is the price of the decision. */
   def bcastIfSmall(df: DataFrame): DataFrame = {
     val (rows, bytes) = measuredRowsBytes(df)
-    val bc = bytesCap(df)
-    if (rows <= RowsCap && (bc <= 0 || bytes <= bc)) broadcast(df) else df
+    if (LocalGraph.fits(df.sparkSession, rows, bytes)) broadcast(df) else df
   }
 
   /** Broadcast hint gated on a row bound the CALLER already holds (an
@@ -97,9 +97,7 @@ object IterState {
     * (e.g. from a signature scan that summed key widths) — still spends
     * no extra job, but prices wide string keys honestly. */
   def bcastIf(df: DataFrame, knownRowsBound: Long,
-      knownBytesBound: Long): DataFrame = {
-    if (knownRowsBound > RowsCap) return df
-    val bc = bytesCap(df)
-    if (bc <= 0 || knownBytesBound <= bc) broadcast(df) else df
-  }
+      knownBytesBound: Long): DataFrame =
+    if (LocalGraph.fits(df.sparkSession, knownRowsBound, knownBytesBound)) broadcast(df)
+    else df
 }

@@ -17,11 +17,6 @@ import org.scalacheck.rng.Seed
 class CentralityKernelSpec extends SparkSpec {
   import spark.implicits._
 
-  private def joinPath[T](body: => T): T = {
-    spark.conf.set(IterState.BytesConfKey, "1")
-    try body finally spark.conf.unset(IterState.BytesConfKey)
-  }
-
   /** A component: nodes 0 until n, edges that may repeat, loop or carry
     * a null end, and seeds drawn from 0 until 2n, so some are missing
     * from the graph and some repeat. */
@@ -47,7 +42,7 @@ class CentralityKernelSpec extends SparkSpec {
 
   private def sameBothWays(what: String, run: () => DataFrame): Unit = {
     val local = run()
-    val join = joinPath(run())
+    val join = aboveGate(run())
     assert(local.schema == join.schema, what)
     assert(rows(local) == rows(join), what)
   }
@@ -99,7 +94,7 @@ class CentralityKernelSpec extends SparkSpec {
     }.asInstanceOf[Throwable].getMessage
     val local = raised
     assert(local.contains(s"sigma=3, dep=0, scale=$scale"), local)
-    assert(joinPath(raised) == local)
+    assert(aboveGate(raised) == local)
   }
 
   test("an overflowing path count fails as an ANSI sum on both paths") {
@@ -116,7 +111,7 @@ class CentralityKernelSpec extends SparkSpec {
       Centrality.shortestPathCounts(edges, seeds, 11).collect()
     }.getMessageParameters.get("message")
     assert(overflow == "long overflow")
-    assert(joinPath(overflow) == "long overflow")
+    assert(aboveGate(overflow) == "long overflow")
     // one hop less fits, and both paths agree on it
     sameBothWays("10 hops", () => Centrality.shortestPathCounts(edges, seeds, 10))
   }
@@ -153,8 +148,8 @@ class CentralityKernelSpec extends SparkSpec {
       assert(count("Centrality.betweenness: collect edges") == 2)
       assert(out.rdd.getNumPartitions ==
         spark.conf.get("spark.sql.shuffle.partitions").toInt)
-      assert(rows(out) == rows(joinPath(Centrality.betweenness(edges, seeds, 3))))
-      joinPath(Centrality.bfsDistances(edges, seeds, 2))
+      assert(rows(out) == rows(aboveGate(Centrality.betweenness(edges, seeds, 3))))
+      aboveGate(Centrality.bfsDistances(edges, seeds, 2))
       assert(sc.getLocalProperty("spark.job.description") == "caller")
       Seq("Centrality.betweenness: round 3", "Centrality.betweenness: backward round 1",
           "Centrality.bfsDistances: round 2").foreach { d =>

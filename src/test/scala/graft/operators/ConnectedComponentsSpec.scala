@@ -14,19 +14,11 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(out.keySet == (1L to 10L).toSet)
   }
 
-  /** Run `body` with the local-finish gate disabled so the distributed
-    * star rounds themselves stay covered. */
-  private def distributedOnly[T](body: => T): T = {
-    spark.conf.set(ConnectedComponents.LocalSolveConfKey, "0")
-    try body
-    finally spark.conf.unset(ConnectedComponents.LocalSolveConfKey)
-  }
-
   test("long chain engages adaptive pointer jumping and still converges exactly") {
     // 800-node path: star rounds alone need ~log2(800) ≈ 10 rounds, so
     // the adaptive jump (from round 4) is exercised. Gate off: this
     // test exists to exercise the distributed rounds.
-    distributedOnly {
+    aboveGate {
       val nodes = (1L to 800L).toDF("id")
       val edges = (1L until 800L).map(i => (i, i + 1)).toDF("src", "dst")
       val out = ConnectedComponents.run(nodes, edges)
@@ -47,12 +39,62 @@ class ConnectedComponentsSpec extends SparkSpec {
       val nodes = (0L until n.toLong).toDF("id")
       val local = ConnectedComponents.run(nodes, edges.toDF("src", "dst"))
         .as[(Long, Long)].collect().toMap
-      val dist = distributedOnly {
+      val dist = aboveGate {
         ConnectedComponents.run(nodes, edges.toDF("src", "dst"))
           .as[(Long, Long)].collect().toMap
       }
       assert(local == dist, s"trial $trial")
     }
+    // one more input keyed by IntegerType, negative ids included: the
+    // finisher collects int keys cast to long and hands back ints
+    val n = 90
+    val edges = Seq.fill(n)((rnd.nextInt(n) - n / 2, rnd.nextInt(n) - n / 2))
+      .filter { case (a, b) => a != b }.toDF("src", "dst")
+    val nodes = (-n / 2 until n / 2).toDF("id")
+    val local = ConnectedComponents.run(nodes, edges)
+    assert(local.schema("component").dataType == org.apache.spark.sql.types.IntegerType)
+    assert(local.as[(Int, Int)].collect().toMap ==
+      aboveGate(ConnectedComponents.run(nodes, edges).as[(Int, Int)].collect().toMap))
+  }
+
+  test("local finish fires mid-iteration once a round brings the pointer set under the gate") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // A dense fixed-seed graph (|E| ≫ |V|): its entry pointer set is over
+    // a gate that its fixpoint (fewer than |V| pointers) is under, so
+    // round 1 runs distributed and the local finish ends the iteration.
+    val rnd = new scala.util.Random(53)
+    val n = 200
+    val pairs = Seq.fill(4000)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+    val entryRows = pairs.filter { case (a, b) => a != b }
+      .map { case (a, b) => (math.max(a, b), math.min(a, b)) }.distinct.size
+    val gate = 16000L // bytes: a long pointer prices at 16
+    assert(entryRows * 16L > gate && n * 16L < gate)
+    val edges = pairs.toDF("src", "dst")
+    val nodes = (0L until n.toLong).toDF("id")
+
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(seen.add)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val mixed = try {
+      spark.conf.set(IterState.BytesConfKey, gate.toString)
+      try ConnectedComponents.run(nodes, edges).as[(Long, Long)].collect().toMap
+      finally spark.conf.unset(IterState.BytesConfKey)
+    } finally {
+      // the listener bus delivers in order: the finish's job comes last
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.contains("ConnectedComponents.run: local finish") &&
+          System.nanoTime() < deadline) Thread.sleep(50)
+      sc.removeSparkListener(listener)
+    }
+    assert(seen.contains("ConnectedComponents.run: round 1"))
+    assert(seen.contains("ConnectedComponents.run: local finish"))
+    assert(mixed == aboveGate(ConnectedComponents.run(nodes, edges)
+      .as[(Long, Long)].collect().toMap))
   }
 
   test("local finisher string keys use Spark's binary ordering (non-ASCII)") {
@@ -67,7 +109,7 @@ class ConnectedComponentsSpec extends SparkSpec {
     val edges = Seq(("Ｚ", "𝐀"), ("zeta", "alpha")).toDF("src", "dst")
     val local = ConnectedComponents.run(nodes, edges)
       .as[(String, String)].collect().toMap
-    val dist = distributedOnly {
+    val dist = aboveGate {
       ConnectedComponents.run(nodes, edges)
         .as[(String, String)].collect().toMap
     }
@@ -88,11 +130,10 @@ class ConnectedComponentsSpec extends SparkSpec {
     val edges = (0 until 39).map(i => (wide(i), wide(i + 1))).toDF("src", "dst")
     val viaLocal = ConnectedComponents.run(nodes, edges)
       .as[(String, String)].collect().toMap
-    spark.conf.set(ConnectedComponents.LocalSolveBytesConfKey, "100")
-    val viaDistributed =
-      try ConnectedComponents.run(nodes, edges)
+    val viaDistributed = aboveGate {
+      ConnectedComponents.run(nodes, edges)
         .as[(String, String)].collect().toMap
-      finally spark.conf.unset(ConnectedComponents.LocalSolveBytesConfKey)
+    }
     assert(viaLocal == viaDistributed)
     assert(viaLocal.values.toSet == Set(wide(0)))
   }
@@ -234,7 +275,7 @@ class ConnectedComponentsSpec extends SparkSpec {
     try {
       for (local <- Seq(true, false)) {
         def run() = ConnectedComponents.run(nodes, pairs.toDF("src", "dst"))
-        val out = if (local) run() else distributedOnly(run())
+        val out = if (local) run() else aboveGate(run())
         val plan = out.queryExecution.executedPlan.toString
         assert(!plan.contains("BroadcastExchange"), s"local=$local\n$plan")
         assert(out.as[(String, String)].collect().toMap == expected, s"local=$local")

@@ -43,9 +43,7 @@ class ResolverDifferentialSpec extends SparkSpec {
 
   private def bothFinishes(body: => Unit): Unit = {
     body
-    spark.conf.set(ConnectedComponents.LocalSolveConfKey, "0")
-    try body
-    finally spark.conf.unset(ConnectedComponents.LocalSolveConfKey)
+    aboveGate(body)
   }
 
   private def at(i: Int) = new java.sql.Timestamp(1767225600000L + i * 1000L)
